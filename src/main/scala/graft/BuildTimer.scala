@@ -11,7 +11,7 @@ package graft
   * body in [[time]]; [[Bench]] drains the accumulator around each query
   * and reports `build` and serve (= wall − build) separately. The
   * depth guard keeps nested builders (ensureSketchedDelta →
-  * ensureSketchedDocs, ensureIvfPqIndex → ensurePqCodebook) from
+  * ensureSketchedDocs, CellIndex.delta → CellIndex.base) from
   * double-counting: only the OUTERMOST frame on a thread accrues.
   *
   * Concurrency (optimization r16): composed queries construct their

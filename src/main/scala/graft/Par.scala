@@ -24,9 +24,11 @@ import org.apache.spark.sql.DataFrame
   *
   * Contract notes:
   *  - Branches MAY construct queries and run `ensure*` builders
-  *    (optimization r16): [[BuildTimer]] serializes outermost builder
-  *    frames on a global lock, so concurrent builds neither
-  *    double-accrue the meter nor race a cold artifact write.
+  *    (optimization r16): [[BuildTimer]] accrues the union of
+  *    overlapping outermost build intervals, so concurrent builds never
+  *    double-accrue the meter, and the per-path lock in
+  *    `Artifacts.buildGate` keeps two branches from racing one cold
+  *    artifact write.
   *  - `localCheckpoint` keeps every row on the executors (block
   *    manager), so this is NOT a driver collect; result rows and schema
   *    are unchanged, only the evaluation order is.

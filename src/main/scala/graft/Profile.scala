@@ -132,7 +132,8 @@ object Profile {
           }
       // phase breakdown of the warm IVF-PQ stored path
       case "ivfpq_phases" =>
-        time("ivfpq:ensure")(graft.operators.Ingest.ensureIvfPqIndex(spark, sfDir))
+        time("ivfpq:ensure")(graft.operators.CellIndex.base(spark, sfDir,
+          graft.operators.CellIndex.Pq))
         val df = time("ivfpq:plan")(
           graft.operators.Ingest.ivfPqTopKStored(spark, sfDir, 10))
         time("ivfpq:exec")(df.count())

@@ -97,21 +97,6 @@ object CorpusStats {
     Seq("agg", "column", "join", "merge", "query", "scan", "window",
       "zzz_absent_probe")
 
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
-
-  /** Commit-marker gate (the [[graft.operators.Ingest]] rule): an
-    * artifact is live only once `_SUCCESS` exists; gated writes are
-    * OVERWRITE so a torn directory is repaired, never served. */
-  private def committed(s: SparkSession, path: String): Boolean =
-    Artifacts.committed(s, path)
-
-  private def buildGate(s: SparkSession, path: String)(write: => Unit): Unit =
-    Artifacts.buildGate(s, path)(write)
-
-  private def readCommitted(s: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = Artifacts.readCommitted(s, path)
-
   /** Stored corpus-stats artifacts: the BASE sketch over `documents` and
     * the DELTA sketch over the append batch (the same `% 101` exact-copy
     * batch as [[graft.operators.Ingest.DocAppendOffset]] — doc ids are
@@ -123,20 +108,20 @@ object CorpusStats {
     * the ingest that produced the shard, and every later reader pays
     * only the cell-wise merge. */
   def ensureCmsArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val bPath = scratch(s, dir, "cms_base")
-    val dPath = scratch(s, dir, "cms_delta")
+    val bPath = Artifacts.scratch(s, dir, "cms_base")
+    val dPath = Artifacts.scratch(s, dir, "cms_delta")
     def counts(docs: DataFrame): DataFrame = docs
       .select(explode(toks(col("text"))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("c"))
-    buildGate(s, bPath) {
+    Artifacts.buildGate(s, bPath) {
       cmsBuild(counts(documents(s, dir)))
         .write.mode("overwrite").parquet(bPath)
     }
-    buildGate(s, dPath) {
+    Artifacts.buildGate(s, dPath) {
       cmsBuild(counts(documents(s, dir).filter(col("doc_id") % 101 === 0)))
         .write.mode("overwrite").parquet(dPath)
     }
-    (readCommitted(s, bPath), readCommitted(s, dPath))
+    (Artifacts.readCommitted(s, bPath), Artifacts.readCommitted(s, dPath))
   }
 
   /** Warm heavy-hitter estimates over the GROWN corpus, served from the
@@ -189,15 +174,15 @@ object CorpusStats {
     * invertible — the deletion verb on the cardinality axis is a
     * rebuild, not a subtraction. */
   def ensureCmsRetract(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val rPath = scratch(s, dir, "cms_retract")
-    buildGate(s, rPath) {
+    val rPath = Artifacts.scratch(s, dir, "cms_retract")
+    Artifacts.buildGate(s, rPath) {
       cmsBuild(documents(s, dir)
         .filter(col("doc_id") % Ingest.ForgetMod === Ingest.ForgetRem)
         .select(explode(toks(col("text"))).as("term"))
         .groupBy("term").agg(count(lit(1)).as("c")))
         .write.mode("overwrite").parquet(rPath)
     }
-    readCommitted(s, rPath)
+    Artifacts.readCommitted(s, rPath)
   }
 
   /** Cell-wise subtraction — union with negated counts, one bounded
@@ -244,13 +229,13 @@ object CorpusStats {
     * shares q_cms_forget's oracle verbatim, so subtracted ≡ purged is
     * pinned by one hash (the q_bm25_purge convention). */
   def ensureCmsPurged(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val pPath = scratch(s, dir, "cms_gen2")
-    buildGate(s, pPath) {
+    val pPath = Artifacts.scratch(s, dir, "cms_gen2")
+    Artifacts.buildGate(s, pPath) {
       val (base, _) = ensureCmsArtifacts(s, dir)
       cmsSubtracted(base, ensureCmsRetract(s, dir))
         .write.mode("overwrite").parquet(pPath)
     }
-    readCommitted(s, pPath)
+    Artifacts.readCommitted(s, pPath)
   }
 
   /** Warm estimates from the PURGED generation — one stored scan, no
@@ -322,17 +307,17 @@ object CorpusStats {
     * shards and across base/delta — so quantiles of the grown corpus
     * come from bounded stored rows alone. */
   def ensureHistArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val bPath = scratch(s, dir, "hist_base")
-    val dPath = scratch(s, dir, "hist_delta")
-    buildGate(s, bPath) {
+    val bPath = Artifacts.scratch(s, dir, "hist_base")
+    val dPath = Artifacts.scratch(s, dir, "hist_delta")
+    Artifacts.buildGate(s, bPath) {
       histBuild(documents(s, dir))
         .write.mode("overwrite").parquet(bPath)
     }
-    buildGate(s, dPath) {
+    Artifacts.buildGate(s, dPath) {
       histBuild(documents(s, dir).filter(col("doc_id") % 101 === 0))
         .write.mode("overwrite").parquet(dPath)
     }
-    (readCommitted(s, bPath), readCommitted(s, dPath))
+    (Artifacts.readCommitted(s, bPath), Artifacts.readCommitted(s, dPath))
   }
 
   /** Exact histogram quantiles of the GROWN corpus served from the
@@ -383,13 +368,13 @@ object CorpusStats {
     * subtraction equals the fresh histogram of the reduced corpus,
     * exactly. */
   def ensureHistRetract(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val rPath = scratch(s, dir, "hist_retract")
-    buildGate(s, rPath) {
+    val rPath = Artifacts.scratch(s, dir, "hist_retract")
+    Artifacts.buildGate(s, rPath) {
       histBuild(documents(s, dir)
         .filter(col("doc_id") % Ingest.ForgetMod === Ingest.ForgetRem))
         .write.mode("overwrite").parquet(rPath)
     }
-    readCommitted(s, rPath)
+    Artifacts.readCommitted(s, rPath)
   }
 
   /** Cell-wise subtraction keeping the shard axis (the artifact stays
@@ -411,13 +396,13 @@ object CorpusStats {
     * as a new generation from stored rows alone (zero corpus I/O).
     * q_quantile_purge shares q_quantile_forget's oracle verbatim. */
   def ensureHistPurged(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val pPath = scratch(s, dir, "hist_gen2")
-    buildGate(s, pPath) {
+    val pPath = Artifacts.scratch(s, dir, "hist_gen2")
+    Artifacts.buildGate(s, pPath) {
       val (base, _) = ensureHistArtifacts(s, dir)
       histSubtracted(base, ensureHistRetract(s, dir))
         .write.mode("overwrite").parquet(pPath)
     }
-    readCommitted(s, pPath)
+    Artifacts.readCommitted(s, pPath)
   }
 
   /** Warm quantiles from the PURGED generation — one stored scan, no
@@ -448,17 +433,17 @@ object CorpusStats {
     * and re-merging a generation is harmless (the property that makes
     * the artifact safe under retried compactions). */
   def ensureHllArtifacts(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val bPath = scratch(s, dir, "hll_base")
-    val dPath = scratch(s, dir, "hll_delta")
-    buildGate(s, bPath) {
+    val bPath = Artifacts.scratch(s, dir, "hll_base")
+    val dPath = Artifacts.scratch(s, dir, "hll_delta")
+    Artifacts.buildGate(s, bPath) {
       hllBuild(documents(s, dir))
         .write.mode("overwrite").parquet(bPath)
     }
-    buildGate(s, dPath) {
+    Artifacts.buildGate(s, dPath) {
       hllBuild(documents(s, dir).filter(col("doc_id") % 101 === 0))
         .write.mode("overwrite").parquet(dPath)
     }
-    (readCommitted(s, bPath), readCommitted(s, dPath))
+    (Artifacts.readCommitted(s, bPath), Artifacts.readCommitted(s, dPath))
   }
 
   /** Distinct-vocabulary estimate of the GROWN corpus served from the

@@ -713,12 +713,12 @@ object Curation {
     * model-maintenance artifact (marker-committed, ≤ [[NbBuckets]]
     * rows), built ONCE over the v1 corpus. */
   def ensureNbCounts(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "nb_counts_v1")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "nb_counts_v1")
+    Artifacts.buildGate(s, path) {
       nbCounts(documents(s, dir), col("lang") === "en")
         .write.mode("overwrite").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Stored MODEL artifact (r12 verdict #4): the ≤ [[NbBuckets]]-row
@@ -730,19 +730,19 @@ object Curation {
     * per query (at 100 TB the per-query retrain q_nb_classify used to
     * run re-tokenizes the corpus on every serve). */
   def ensureNbModel(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val wPath = scratch(s, dir, "nb_model_v1")
-    val mPath = scratch(s, dir, "nb_model_meta_v1")
-    buildGate(s, wPath) {
+    val wPath = Artifacts.scratch(s, dir, "nb_model_v1")
+    val mPath = Artifacts.scratch(s, dir, "nb_model_meta_v1")
+    Artifacts.buildGate(s, wPath) {
       nbWeights(ensureNbCounts(s, dir))
         .write.mode("overwrite").parquet(wPath)
     }
-    buildGate(s, mPath) {
+    Artifacts.buildGate(s, mPath) {
       documents(s, dir).agg(
         sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_t"),
         sum(when(col("lang") === "en", 0L).otherwise(1L)).as("n_b"))
         .write.mode("overwrite").parquet(mPath)
     }
-    (readCommitted(s, wPath), readCommitted(s, mPath))
+    (Artifacts.readCommitted(s, wPath), Artifacts.readCommitted(s, mPath))
   }
 
   /** Freeze the classifier from the STORED artifact — ≤ [[NbBuckets]]
@@ -845,11 +845,11 @@ object Curation {
     * the θ-policy's refresh arm serves. Delta-maintained, so the write
     * costs the bounded diff tokenize + a ≤ [[NbBuckets]]-row job. */
   def ensureNbModelV2(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "nb_model_v2")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "nb_model_v2")
+    Artifacts.buildGate(s, path) {
       nbModelIncremental(s, dir).write.mode("overwrite").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Drift-triggered MODEL REFRESH policy (the q_cms_policy convention
@@ -1006,18 +1006,6 @@ object Curation {
           col("lang"), col("text")))
   }
 
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
-
-  private def committed(s: SparkSession, path: String): Boolean =
-    Artifacts.committed(s, path)
-
-  private def buildGate(s: SparkSession, path: String)(write: => Unit): Unit =
-    Artifacts.buildGate(s, path)(write)
-
-  private def readCommitted(s: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = Artifacts.readCommitted(s, path)
-
   /** Stored inference artifact over snapshot v1: (doc_id, digest,
     * n_features, sum_micro) in ONE narrow kernel pass — the INTEGER
     * kernel outputs are stored (the expensive tokenize+hash+dot), the
@@ -1025,8 +1013,8 @@ object Curation {
     * engine-exact and the serving score can never drift from a stale
     * stored float. Commit-marker-gated like every stored index. */
   def ensureScoreArtifact(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "doc_scores")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "doc_scores")
+    Artifacts.buildGate(s, path) {
       graft.functions.QualityModel.register(s)
       documents(s, dir)
         .select(col("doc_id"), md5(col("text")).as("digest"),
@@ -1037,7 +1025,7 @@ object Curation {
           col("f.sum_micro").as("sum_micro"))
         .write.mode("overwrite").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Change-data-capture report between corpus snapshots: FULL OUTER

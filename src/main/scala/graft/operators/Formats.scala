@@ -24,9 +24,6 @@ import graft.queries.Tables.documents
   * map-side-combined aggregate per format. */
 object Formats {
 
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
-
   /** Order-independent per-row fingerprint: exact integer fold of the
     * first 8 md5 hex digits of `lang || '#' || source || '#' || text`
     * (16⁸ < 2³¹·2, summed in BIGINT — overflow-free past 10⁹ rows).
@@ -48,7 +45,7 @@ object Formats {
   /** Write documents through each format's writer, read back through
     * its reader, fingerprint. Returns one row per format. */
   def formatRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(s, dir, "fmt_roundtrip")
+    val root = Artifacts.scratch(s, dir, "fmt_roundtrip")
     val docs = documents(s, dir)
       .select("doc_id", "lang", "source", "text")
     val schema = docs.schema

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{Sketch, VectorOps}
+import graft.operators.CellIndex.{Ivf, Pq, PqModel, Sq, SqModel}
 import graft.queries.Tables.{documents, embeddings}
 
 /** The STORED-SKETCH ingest path (SURVEY.md §9.2): at 100 TB, sketches
@@ -43,27 +44,6 @@ import graft.queries.Tables.{documents, embeddings}
   */
 object Ingest {
 
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
-
-  /** A stored artifact is LIVE only once its `_SUCCESS` commit marker
-    * exists — a bare directory can be a torn write from a crashed run,
-    * and a SaveMode.Ignore gated on directory existence would pin that
-    * damage forever (ADVICE r7). Every stored-index gate checks the
-    * marker and the gated writes use OVERWRITE, so a torn artifact is
-    * repaired by recomputation, never served empty or partial.
-    * Multi-directory generations write the PAYLOAD first and the
-    * centroid/marker directory LAST, so the gate implies a complete
-    * generation. */
-  private def committed(s: SparkSession, path: String): Boolean =
-    Artifacts.committed(s, path)
-
-  private def buildGate(s: SparkSession, path: String)(write: => Unit): Unit =
-    Artifacts.buildGate(s, path)(write)
-
-  private def readCommitted(s: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = Artifacts.readCommitted(s, path)
-
   /** Corpus size for geometry derivation, memoized per (app, sf): the
     * count resolves the stored index's IDENTITY (nCells is part of its
     * path), so it must be known before any warm read — one cheap
@@ -99,7 +79,7 @@ object Ingest {
       .withColumn("vec_id", col("vec_id") + lit(TwinOffset))
   /** The corpus the stored IVF-family indexes are built over:
     * embeddings ∪ canaries. */
-  private def indexedCorpus(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def indexedCorpus(s: SparkSession, dir: String): DataFrame = {
     val emb = embeddings(s, dir)
     emb.unionByName(canaryTwins(emb))
   }
@@ -122,12 +102,12 @@ object Ingest {
   }
 
   def ensureSketchedDocs(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "docs_sketched")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "docs_sketched")
+    Artifacts.buildGate(s, path) {
       sketchProjection(documents(s, dir))
         .write.mode("overwrite").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** DELTA half of the sketch index's LSM posture — the third stored
@@ -138,12 +118,12 @@ object Ingest {
     * snapshot. */
   def ensureSketchedDelta(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
     val stored = ensureSketchedDocs(s, dir)
-    val path = scratch(s, dir, "docs_sketched_delta")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "docs_sketched_delta")
+    Artifacts.buildGate(s, path) {
       sketchProjection(docAppendBatch(s, dir))
         .write.mode("overwrite").parquet(path)
     }
-    (stored, readCommitted(s, path))
+    (stored, Artifacts.readCommitted(s, path))
   }
 
   /** Sketch-index COMPACTION: merge base ∪ delta into the next
@@ -153,11 +133,11 @@ object Ingest {
     * accumulate. */
   def compactSketchIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
     val (base, delta) = ensureSketchedDelta(s, dir)
-    val path = scratch(s, dir, "docs_sketched_gen2")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "docs_sketched_gen2")
+    Artifacts.buildGate(s, path) {
       base.unionByName(delta).write.mode("overwrite").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   // --- stored inverted index (sparse / BM25 retrieval) -----------------
@@ -218,16 +198,16 @@ object Ingest {
     * rule above), so a torn build recomputes rather than serving a
     * partial index. */
   def ensureTermIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val pPath = scratch(s, dir, "term_postings")
-    val sPath = scratch(s, dir, "term_stats")
-    buildGate(s, sPath) {
+    val pPath = Artifacts.scratch(s, dir, "term_postings")
+    val sPath = Artifacts.scratch(s, dir, "term_stats")
+    Artifacts.buildGate(s, sPath) {
       // two consumers (postings write + stats write): localCheckpoint so
       // the corpus is read and tokenized ONCE per index build, not once
       // per write job (the jaccardPairsExact multi-consumer rule)
       val toks = documents(s, dir)
         .select(col("doc_id"), TextAnalysis.bm25Toks(col("text")).as("t"))
         .localCheckpoint()
-      // repartition on the partition column first (the ensureIvfIndex
+      // repartition on the partition column first (the CellIndex
       // file-count rule): each write task owns whole buckets, so the
       // layout is ≤ NumTermBuckets files, not buckets × shuffle tasks
       toks
@@ -240,7 +220,7 @@ object Ingest {
         .agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_total"))
         .write.mode("overwrite").parquet(sPath)
     }
-    (readCommitted(s, pPath), readCommitted(s, sPath))
+    (Artifacts.readCommitted(s, pPath), Artifacts.readCommitted(s, sPath))
   }
 
   /** Align a probe plan's `bucket` key with the partition column's
@@ -387,9 +367,9 @@ object Ingest {
   def ensureTermIndexDelta(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = graft.BuildTimer.time {
     val (postings, stats) = ensureTermIndex(s, dir)
-    val pPath = scratch(s, dir, "term_postings_delta")
-    val sPath = scratch(s, dir, "term_stats_delta")
-    buildGate(s, sPath) {
+    val pPath = Artifacts.scratch(s, dir, "term_postings_delta")
+    val sPath = Artifacts.scratch(s, dir, "term_stats_delta")
+    Artifacts.buildGate(s, sPath) {
       // two consumers (postings + stats): tokenize the batch once
       val toks = docAppendBatch(s, dir)
         .select(col("doc_id"), TextAnalysis.bm25Toks(col("text")).as("t"))
@@ -404,7 +384,7 @@ object Ingest {
         .agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_total"))
         .write.mode("overwrite").parquet(sPath)
     }
-    (postings, stats, readCommitted(s, pPath), readCommitted(s, sPath))
+    (postings, stats, Artifacts.readCommitted(s, pPath), Artifacts.readCommitted(s, sPath))
   }
 
   /** Combined (N, Σdl) of base ∪ delta — two 1-row frames summed, so
@@ -415,8 +395,8 @@ object Ingest {
       .agg(sum("n_docs").as("n_docs"), sum("dl_total").as("dl_total"))
 
   /** Warm BM25 top-k over base ∪ delta postings — the sparse analog of
-    * [[ivfTopKAppended]]: each side gets its OWN static bucket IN-list
-    * prune + broadcast term join, and the union runs over
+    * [[ivfServe]] over a delta generation: each side gets its OWN static
+    * bucket IN-list prune + broadcast term join, and the union runs over
     * already-pruned scans, so neither side ever reads a non-query
     * bucket directory. df falls out of the unioned tf frame (one row
     * per matching (doc, term) across BOTH generations), so the idf
@@ -441,20 +421,20 @@ object Ingest {
     * with merged stats. Old generation untouched (snapshot isolation);
     * serving flips to gen2 once its stats marker exists. At production
     * scale this is the scheduled job that keeps per-query file counts
-    * bounded as deltas accumulate — the [[compactIvfIndex]] posture on
+    * bounded as deltas accumulate — the [[CellIndex.compact]] posture on
     * the sparse axis. */
   def compactTermIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
     val (postings, stats, dPostings, dStats) = ensureTermIndexDelta(s, dir)
-    val pPath = scratch(s, dir, "term_postings_gen2")
-    val sPath = scratch(s, dir, "term_stats_gen2")
-    buildGate(s, sPath) {
+    val pPath = Artifacts.scratch(s, dir, "term_postings_gen2")
+    val sPath = Artifacts.scratch(s, dir, "term_stats_gen2")
+    Artifacts.buildGate(s, sPath) {
       postings.unionByName(dPostings)
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(pPath)
       mergedTermStats(stats, dStats)
         .write.mode("overwrite").parquet(sPath)
     }
-    (readCommitted(s, pPath), readCommitted(s, sPath))
+    (Artifacts.readCommitted(s, pPath), Artifacts.readCommitted(s, sPath))
   }
 
   /** Warm BM25 top-k from the COMPACTED generation — the single-scan
@@ -497,9 +477,9 @@ object Ingest {
     * silently, for every surviving document. Commit protocol as always:
     * ids payload first, the stats directory last as the marker. */
   def ensureForgetSet(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val iPath = scratch(s, dir, "forget_ids")
-    val sPath = scratch(s, dir, "forget_stats")
-    buildGate(s, sPath) {
+    val iPath = Artifacts.scratch(s, dir, "forget_ids")
+    val sPath = Artifacts.scratch(s, dir, "forget_stats")
+    Artifacts.buildGate(s, sPath) {
       // two consumers (ids + stats): tokenize the retraction once
       val toks = forgetBatch(s, dir)
         .select(col("doc_id"), TextAnalysis.bm25Toks(col("text")).as("t"))
@@ -509,7 +489,7 @@ object Ingest {
         .agg(count(lit(1)).as("n_docs"), sum("dl").as("dl_total"))
         .write.mode("overwrite").parquet(sPath)
     }
-    (readCommitted(s, iPath), readCommitted(s, sPath))
+    (Artifacts.readCommitted(s, iPath), Artifacts.readCommitted(s, sPath))
   }
 
   /** Corpus stats with the retraction SUBTRACTED — the negated
@@ -589,16 +569,16 @@ object Ingest {
   def purgeTermIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
     val (postings, stats) = ensureTermIndex(s, dir)
     val (dead, negStats) = ensureForgetSet(s, dir)
-    val pPath = scratch(s, dir, "term_postings_purged")
-    val sPath = scratch(s, dir, "term_stats_purged")
-    buildGate(s, sPath) {
+    val pPath = Artifacts.scratch(s, dir, "term_postings_purged")
+    val sPath = Artifacts.scratch(s, dir, "term_stats_purged")
+    Artifacts.buildGate(s, sPath) {
       postings.join(broadcast(dead), Seq("doc_id"), "left_anti")
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(pPath)
       subtractedStats(stats, negStats)
         .write.mode("overwrite").parquet(sPath)
     }
-    (readCommitted(s, pPath), readCommitted(s, sPath))
+    (Artifacts.readCommitted(s, pPath), Artifacts.readCommitted(s, sPath))
   }
 
   /** Warm BM25 from the PURGED generation — single pruned scan, no
@@ -695,9 +675,9 @@ object Ingest {
     val setKey = deadIds.agg(sum(xxhash64(col("doc_id")))).head()
     val tag = java.lang.Long.toHexString(
       if (setKey.isNullAt(0)) 0L else setKey.getLong(0))
-    val pPath = scratch(s, dir, s"term_postings_purged_$tag")
-    val sPath = scratch(s, dir, s"term_stats_purged_$tag")
-    buildGate(s, sPath) { graft.BuildTimer.time {
+    val pPath = Artifacts.scratch(s, dir, s"term_postings_purged_$tag")
+    val sPath = Artifacts.scratch(s, dir, s"term_stats_purged_$tag")
+    Artifacts.buildGate(s, sPath) { graft.BuildTimer.time {
       postings.join(broadcast(deadIds), Seq("doc_id"), "left_anti")
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(pPath)
@@ -708,7 +688,7 @@ object Ingest {
       subtractedStats(stats, negStats)
         .write.mode("overwrite").parquet(sPath)
     } }
-    val purged = readCommitted(s, pPath)
+    val purged = Artifacts.readCommitted(s, pPath)
     import s.implicits._
     val q = queryTerms.toDF("term").select(col("term"),
       termBucket(col("term")).as("bucket"))
@@ -716,7 +696,7 @@ object Ingest {
       .filter(col("bucket").isin(termBucketIds(s, queryTerms): _*))
       .join(broadcast(probeBuckets(q, purged)), Seq("bucket", "term"))
       .select("doc_id", "term", "tf", "dl")
-    TextAnalysis.bm25Rank(tf, readCommitted(s, sPath), k, k1, b)
+    TextAnalysis.bm25Rank(tf, Artifacts.readCommitted(s, sPath), k, k1, b)
   }
 
   /** Near-dup pairs over the stored sketch index with the retraction
@@ -752,13 +732,13 @@ object Ingest {
     * one-liner folded into its scheduled compaction (the `dead` hook on
     * the side frame), so it is not duplicated as a separate artifact. */
   def purgeSketchIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "docs_sketched_purged")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "docs_sketched_purged")
+    Artifacts.buildGate(s, path) {
       ensureSketchedDocs(s, dir)
         .join(broadcast(ensureForgetSet(s, dir)._1), Seq("doc_id"), "left_anti")
         .write.mode("overwrite").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Near-dup pairs from the PURGED sketch generation — single scan, no
@@ -780,8 +760,8 @@ object Ingest {
     * tokenizer — the same split the index build, the fresh scorer and
     * the oracle replay, so positions cannot drift from terms. */
   def ensurePhraseIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "term_positions")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "term_positions")
+    Artifacts.buildGate(s, path) {
       documents(s, dir)
         .select(col("doc_id"),
           posexplode(TextAnalysis.bm25Toks(col("text"))).as(Seq("pos", "term")))
@@ -791,7 +771,7 @@ object Ingest {
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** BATCHED exact phrase search from the stored positional index: every
@@ -865,14 +845,14 @@ object Ingest {
     * rewritten under the next generation path, same 64-way bucket
     * layout ([[purgeTermIndex]]'s posture; nothing else to correct). */
   def purgePhraseIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "term_positions_purged")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "term_positions_purged")
+    Artifacts.buildGate(s, path) {
       ensurePhraseIndex(s, dir)
         .join(broadcast(ensureForgetSet(s, dir)._1), Seq("doc_id"), "left_anti")
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Batched phrase search from the PURGED positional generation — one
@@ -895,14 +875,14 @@ object Ingest {
     * one digest row per distinct block — a fraction of corpus bytes —
     * and admission probes it with an anti-join, never a corpus scan. */
   def ensureBlockIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "block_index")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "block_index")
+    Artifacts.buildGate(s, path) {
       Dedup.blockFrame(Dedup.blockBase(documents(s, dir), Dedup.ParaBlockLen))
         .select(substring(md5(col("blk")), 1, 16).as("w"))
         .distinct()
         .write.mode("overwrite").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Span-level ADMISSION: rewrite each incoming doc keeping only
@@ -933,48 +913,6 @@ object Ingest {
         coalesce(col("admit_text"), lit("")).as("admit_text"))
   }
 
-  /** IVF index tables (centroids + cell-partitioned assignments), written
-    * once per (app, sf). Returns (centroids, assignments-reader).
-    * nCells ≤ 0 (the default) derives the geometry from corpus size at
-    * ingest — nCells ≈ √N via [[Similarity.ivfNumCells]] — instead of a
-    * fixed constant that would leave cells 10⁶× oversized at production
-    * scale (VERDICT r4 #5). */
-  def ensureIvfIndex(s: SparkSession, dir: String,
-      nCells: Int = 0): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val cells =
-      if (nCells > 0) nCells
-      else Similarity.ivfNumCells(embeddingCount(s, dir))
-    // nCells is part of the index identity (same rule as the PQ paths):
-    // an unkeyed path would let a non-default nCells silently reuse the
-    // previously stored cell geometry via SaveMode.Ignore.
-    val cPath = scratch(s, dir, s"ivf_centroids_c$cells")
-    val aPath = scratch(s, dir, s"ivf_assign_c$cells")
-    VectorOps.register(s)
-    // TRAINED centroids (3 Lloyd passes), not raw seed vectors: seed
-    // "centroids" are arbitrary corpus rows, so at the derived √N
-    // geometry they scatter near-neighbors across cells; trained cells
-    // keep them co-located — training is a one-time ingest cost,
-    // exactly where production IVF pays it. Training is EAGER (each
-    // Lloyd pass localCheckpoints), so unlike the lazy writes below a
-    // SaveMode.Ignore cannot skip it — check the stored path FIRST
-    // (the ensurePqCodebook pattern) or every warm probe would retrain.
-    buildGate(s, cPath) {
-      val emb = indexedCorpus(s, dir)
-      val centroids = Similarity.kmeansCentroids(emb, cells)
-      // repartition on the partition column first: each write task then
-      // owns whole cells, so the layout is nCells files instead of
-      // nCells × shuffle.partitions fragments (the small-files problem
-      // that kills object-store listings at scale). Assignment itself
-      // is the narrow graft_ivf_cell kernel — the repartition is the
-      // ONLY exchange in the index build. Payload first, marker last.
-      Similarity.ivfAssignKernel(emb, centroids)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(aPath)
-      centroids.write.mode("overwrite").parquet(cPath)
-    }
-    (readCommitted(s, cPath), readCommitted(s, aPath))
-  }
-
   /** Align the probe plan's `cell` key with the stored partition
     * column's read-back type, so the join key is the BARE partition
     * attribute on the scan side — a cast there would defeat dynamic
@@ -996,31 +934,51 @@ object Ingest {
       .filter(col("rn") <= nProbe)
       .select(col("cid").as("cell"))
 
-  /** Warm-path IVF top-k from the STORED index: probe-cell selection is
-    * a plan over the (tiny, nCells-row) centroid table, joined broadcast
-    * against the cell-partitioned assignments so DYNAMIC PARTITION
-    * PRUNING prunes cell directories AT THE SCAN — same semantics as a
-    * driver-collected `isin` literal, but with no driver round-trip and
-    * no plan-size blow-up when nCells ≈ √N ≈ 10⁴⁺ at production scale
-    * (VERDICT r3 "What's wrong #1"). No assignment computation, no
-    * shuffle of the data path. */
-  def ivfTopKStored(s: SparkSession, dir: String, k: Int,
-      nProbe: Int = 0): DataFrame = {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val q = Similarity.queryRow(embeddings(s, dir))
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
-    assign
-      .join(broadcast(probeCells(probePlan, assign)), "cell")
+  /** The occupancy-sized default probe width ([[Similarity.ivfNumProbe]])
+    * unless the caller forces `nProbe` > 0. */
+  private def probeWidth(s: SparkSession, dir: String, k: Int,
+      nProbe: Int): Int =
+    if (nProbe > 0) nProbe
+    else {
+      val n = embeddingCount(s, dir)
+      Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
+    }
+
+  /** The probed cells of every generation frame: ONE probe plan, but
+    * each frame joins it SEPARATELY so every scan gets its own
+    * dynamic-partition-pruning filter (a union UNDER the join would
+    * block DPP insertion), and the union runs over already-pruned scans
+    * — no frame ever reads an unprobed cell directory. */
+  private def probed(frames: Seq[DataFrame], probePlan: DataFrame,
+      cols: String*): DataFrame =
+    frames.map(f => f.join(broadcast(probeCells(probePlan, f)), "cell")
+      .select(cols.map(col): _*)).reduce(_.unionByName(_))
+
+  /** Warm-path single-query IVF top-k over ANY stored generation of the
+    * dense family: probe-cell selection is a plan over the (tiny,
+    * nCells-row) centroid table, joined broadcast against the
+    * cell-partitioned frames so DYNAMIC PARTITION PRUNING prunes cell
+    * directories AT THE SCAN — same semantics as a driver-collected
+    * `isin` literal, but with no driver round-trip and no plan-size
+    * blow-up when nCells ≈ √N ≈ 10⁴⁺ at production scale (VERDICT r3
+    * "What's wrong #1"). No assignment computation, no shuffle of the
+    * data path. `q` is the one-row (q_emb, q_id) probe. */
+  def ivfServe(s: SparkSession, dir: String, gen: CellGen[_], q: DataFrame,
+      k: Int, nProbe: Int = 0): DataFrame =
+    probed(gen.frames, singleQueryProbePlan(gen.centroids, q,
+        probeWidth(s, dir, k, nProbe)), "vec_id", "embedding")
       .crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("vec_id"), VectorOps.cosine(col("embedding"), col("q_emb")).as("score"))
+      .select(col("vec_id"),
+        VectorOps.cosine(col("embedding"), col("q_emb")).as("score"))
       .orderBy(desc("score"), asc("vec_id"))
       .limit(k)
-  }
+
+  /** [[ivfServe]] over the stored base for the default probe row. */
+  def ivfTopKStored(s: SparkSession, dir: String, k: Int,
+      nProbe: Int = 0): DataFrame =
+    ivfServe(s, dir, CellIndex.base(s, dir, Ivf),
+      Similarity.queryRow(embeddings(s, dir)), k, nProbe)
 
   /** DIVERSIFIED serving off the stored IVF index — the production
     * retrieval shape: index-backed candidate generation (cell-pruned
@@ -1060,9 +1018,10 @@ object Ingest {
 
   private def mmrStoredPoolProbed(s: SparkSession, dir: String,
       n: Int, probe: Int): DataFrame = {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
+    val base = CellIndex.base(s, dir, Ivf)
+    val assign = base.frames.head
     val q = Similarity.queryRow(embeddings(s, dir))
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
+    val probePlan = singleQueryProbePlan(base.centroids, q, probe)
     assign
       .join(broadcast(probeCells(probePlan, assign)), "cell")
       .crossJoin(broadcast(q))
@@ -1129,7 +1088,7 @@ object Ingest {
     * copies, bit-identical cosines → provably co-assigned cells) give
     * the stored path the same guaranteed-recall gate. */
   def semDedupPairsStored(s: SparkSession, dir: String, tau: Double): DataFrame = {
-    val (_, assign) = ensureIvfIndex(s, dir)
+    val assign = CellIndex.base(s, dir, Ivf).frames.head
     // shared blocked engine: bounded aggregation buffers on oversized
     // cells, historical single-task path on cold ones (Similarity.cellPairs)
     Similarity.cellPairs(assign.select("vec_id", "embedding", "cell"), tau)
@@ -1165,9 +1124,15 @@ object Ingest {
     * +[[AppendOffset]]. They exist ONLY in the delta, so retrieving one
     * proves the frozen-centroid assignment, the delta write layout, and
     * the unioned probe path. */
-  private def appendBatch(emb: DataFrame): DataFrame =
+  private[operators] def appendBatch(emb: DataFrame): DataFrame =
     emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
       .withColumn("vec_id", col("vec_id") + lit(AppendOffset))
+
+  /** The corpus the grown generations (base ∪ delta, gen2, gen3)
+    * index: indexed corpus ∪ append batch — their rescore and retrain
+    * input. */
+  private[graft] def grownCorpus(s: SparkSession, dir: String): DataFrame =
+    indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir)))
 
   /** Deterministic probe row for the append gate: the first append
     * source (the (NumCanaries+1)-th lowest vec_id) — its exact copy is
@@ -1175,94 +1140,46 @@ object Ingest {
     * served as a literal one-row relation (the [[Similarity.queryRow]]
     * treatment — see its doc for the measured rationale). */
   private[graft] def appendQueryRow(emb: DataFrame): DataFrame =
-    Similarity.localizedBatch(emb.sparkSession,
+    Similarity.localizedBatchFrame(emb.sparkSession,
       Similarity.collectOneProbe(
         emb.orderBy("vec_id").offset(NumCanaries).limit(1)
           .select(col("embedding").as("q_emb"), col("vec_id").as("q_id")))
         .toArray)
 
-  /** Materialize the delta once per (app, sf): assign against the STORED
-    * centroids (loaded, never retrained) and write partitioned by cell.
-    * Returns (centroids, base assignments, delta assignments). */
-  def ensureIvfDelta(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val dPath = scratch(s, dir, s"ivf_delta_c$cells")
-    buildGate(s, dPath) {
-      Similarity.ivfAssignKernel(appendBatch(embeddings(s, dir)), centroids)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dPath)
-    }
-    (centroids, assign, readCommitted(s, dPath))
-  }
+  /** Loaded codebooks, memoized per (app, path): the codebook is a
+    * bounded model artifact (~8 KB) — re-reading it through a Spark job
+    * on EVERY warm probe is pure per-query overhead. */
+  private val cbCache = scala.collection.concurrent.TrieMap
+    .empty[(String, String), (Array[Float], Int)]
 
-  /** Warm-path IVF top-k over base ∪ delta: ONE probe plan, but each
-    * scan joins it SEPARATELY so both sides get their own
-    * dynamic-partition-pruning filter (a union UNDER the join would
-    * block DPP insertion), and the union runs over already-pruned
-    * scans — neither side ever reads an unprobed cell directory. */
-  def ivfTopKAppended(s: SparkSession, dir: String, k: Int,
-      nProbe: Int = 0): DataFrame = {
-    val (centroids, assign, delta) = ensureIvfDelta(s, dir)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val q = appendQueryRow(embeddings(s, dir))
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
-    def pruned(a: DataFrame): DataFrame =
-      a.join(broadcast(probeCells(probePlan, a)), "cell")
-        .select("vec_id", "embedding")
-    pruned(assign).unionByName(pruned(delta))
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("vec_id"),
-        VectorOps.cosine(col("embedding"), col("q_emb")).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
-  }
-
-  /** COMPACTION — the scheduled half of the LSM posture: merge base ∪
-    * delta into the next index GENERATION under a new path, cell-
-    * partitioned like the base. The old generation's files are never
-    * touched (in-flight readers keep their snapshot); serving switches
-    * to the new generation once it exists. One wide job per compaction,
-    * amortized across every probe until the next one — at production
-    * scale this is the nightly job that keeps per-probe file counts
-    * bounded as deltas accumulate. */
-  def compactIvfIndex(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (centroids, assign, delta) = ensureIvfDelta(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val gPath = scratch(s, dir, s"ivf_assign_gen2_c$cells")
-    buildGate(s, gPath) {
-      assign.unionByName(delta)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-    }
-    (centroids, readCommitted(s, gPath))
-  }
-
-  /** Warm-path IVF top-k from the COMPACTED generation — the
-    * single-scan serving shape of [[ivfTopKStored]], over gen2. */
-  def ivfTopKCompacted(s: SparkSession, dir: String, k: Int,
-      nProbe: Int = 0): DataFrame = {
-    val (centroids, gen2) = compactIvfIndex(s, dir)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val q = appendQueryRow(embeddings(s, dir))
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
-    gen2
-      .join(broadcast(probeCells(probePlan, gen2)), "cell")
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("vec_id"),
-        VectorOps.cosine(col("embedding"), col("q_emb")).as("score"))
-      .orderBy(desc("score"), asc("vec_id"))
-      .limit(k)
+  /** Codebook-only half of [[ensurePqIndex]] — train-or-load without
+    * materializing any code table (IVF-PQ stores its OWN cell-partitioned
+    * codes; encoding the corpus a second time into a flat table it never
+    * reads would double the cold ingest cost). */
+  def ensurePqCodebook(s: SparkSession, dir: String, m: Int = 8,
+      kCent: Int = 256): (Array[Float], Int) = graft.BuildTimer.time {
+    val cbPath = Artifacts.scratch(s, dir, s"pq_codebook_m${m}_k$kCent")
+    cbCache.getOrElseUpdate((s.sparkContext.applicationId, cbPath), {
+      graft.functions.PqOps.register(s)
+      // TrieMap.getOrElseUpdate may evaluate this op on TWO racing
+      // threads (the map stays consistent but the op's side effects
+      // run twice): the cold train+write must go through buildGate like
+      // every other artifact write — concurrent overwrites of one
+      // directory clobber each other's _temporary files (surfaced as a
+      // q_ivfpq_compact cold failure once the compact gates' two serves
+      // went concurrent, optimization r16)
+      Artifacts.buildGate(s, cbPath) {
+        val (cbT, dimT, _) = Similarity.pqTrain(embeddings(s, dir), m, kCent)
+        import s.implicits._
+        Seq((cbT.toSeq, dimT, m, kCent)).toDF("cb", "dim", "m", "k")
+          .write.mode("overwrite").parquet(cbPath)
+      }
+      val r = Artifacts.readCommitted(s, cbPath).head()
+      require(r.getInt(2) == m && r.getInt(3) == kCent,
+        s"stored PQ codebook was trained with m=${r.getInt(2)}, " +
+          s"k=${r.getInt(3)}; requested m=$m, k=$kCent")
+      (r.getSeq[Float](0).toArray, r.getInt(1))
+    })
   }
 
   /** PQ code table (vec_id, code) + persisted codebook, written once
@@ -1273,42 +1190,6 @@ object Ingest {
     * desynchronize codes and tables (the forced-recall gate would
     * catch it). The cold path pays train+encode once; every later
     * probe scans 16 B/row. */
-  /** Codebook-only half of [[ensurePqIndex]] — train-or-load without
-    * materializing any code table (IVF-PQ stores its OWN cell-partitioned
-    * codes; encoding the corpus a second time into a flat table it never
-    * reads would double the cold ingest cost). */
-  /** Loaded codebooks, memoized per (app, path): the codebook is a
-    * bounded model artifact (~8 KB) — re-reading it through a Spark job
-    * on EVERY warm probe is pure per-query overhead. */
-  private val cbCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Array[Float], Int)]
-
-  def ensurePqCodebook(s: SparkSession, dir: String, m: Int = 8,
-      kCent: Int = 256): (Array[Float], Int) = graft.BuildTimer.time {
-    val cbPath = scratch(s, dir, s"pq_codebook_m${m}_k$kCent")
-    cbCache.getOrElseUpdate((s.sparkContext.applicationId, cbPath), {
-      graft.functions.PqOps.register(s)
-      // TrieMap.getOrElseUpdate may evaluate this op on TWO racing
-      // threads (the map stays consistent but the op's side effects
-      // run twice): the cold train+write must go through buildGate like
-      // every other artifact write — concurrent overwrites of one
-      // directory clobber each other's _temporary files (surfaced as a
-      // q_ivfpq_compact cold failure once the compact gates' two serves
-      // went concurrent, optimization r16)
-      buildGate(s, cbPath) {
-        val (cbT, dimT, _) = Similarity.pqTrain(embeddings(s, dir), m, kCent)
-        import s.implicits._
-        Seq((cbT.toSeq, dimT, m, kCent)).toDF("cb", "dim", "m", "k")
-          .write.mode("overwrite").parquet(cbPath)
-      }
-      val r = readCommitted(s, cbPath).head()
-      require(r.getInt(2) == m && r.getInt(3) == kCent,
-        s"stored PQ codebook was trained with m=${r.getInt(2)}, " +
-          s"k=${r.getInt(3)}; requested m=$m, k=$kCent")
-      (r.getSeq[Float](0).toArray, r.getInt(1))
-    })
-  }
-
   def ensurePqIndex(s: SparkSession, dir: String, m: Int = 8,
       kCent: Int = 256): (Array[Float], Int, DataFrame) = graft.BuildTimer.time {
     // (m, kCent) are part of the index identity: the flat-codebook
@@ -1319,14 +1200,14 @@ object Ingest {
     // missing leaf under an existing scratch parent surfaces as
     // FileNotFoundException, under a missing parent as AnalysisException
     // — seen both.)
-    val codePath = scratch(s, dir, s"pq_codes_m${m}_k$kCent")
+    val codePath = Artifacts.scratch(s, dir, s"pq_codes_m${m}_k$kCent")
     val (cb, dim) = ensurePqCodebook(s, dir, m, kCent)
-    buildGate(s, codePath) {
+    Artifacts.buildGate(s, codePath) {
       embeddings(s, dir).select(col("vec_id"),
           graft.functions.PqOps.encode(col("embedding"), cb, m, kCent).as("code"))
         .write.mode("overwrite").parquet(codePath)
     }
-    (cb, dim, readCommitted(s, codePath))
+    (cb, dim, Artifacts.readCommitted(s, codePath))
   }
 
   /** Warm-path PQ top-k: ADC ranking over the STORED 16 B/row code
@@ -1355,12 +1236,12 @@ object Ingest {
     * committed-marker-gated like every other stored artifact.
     * Returns (mins, steps, code frame). */
   def ensureSqModel(s: SparkSession, dir: String): (Array[Float], Array[Float]) = graft.BuildTimer.time {
-    val modelPath = scratch(s, dir, "sq8_model")
+    val modelPath = Artifacts.scratch(s, dir, "sq8_model")
     graft.functions.SqOps.register(s)
     sqCache.getOrElseUpdate((s.sparkContext.applicationId, modelPath), {
     // racing-op hazard: see ensurePqCodebook — the cold write goes
     // through buildGate; every evaluator then reads the committed model
-    buildGate(s, modelPath) {
+    Artifacts.buildGate(s, modelPath) {
       val emb = embeddings(s, dir)
       // per-dim (min, max) via posexplode + ONE two-phase aggregation:
       // partial agg combines inside each task, so the exchange carries
@@ -1384,7 +1265,7 @@ object Ingest {
       Seq((mn.toSeq, st.toSeq)).toDF("mins", "steps")
         .write.mode("overwrite").parquet(modelPath)
     }
-    val r = readCommitted(s, modelPath).head()
+    val r = Artifacts.readCommitted(s, modelPath).head()
     (r.getSeq[Float](0).toArray, r.getSeq[Float](1).toArray)
     })
   }
@@ -1397,15 +1278,15 @@ object Ingest {
     .empty[(String, String), (Array[Float], Array[Float])]
 
   def ensureSqIndex(s: SparkSession, dir: String): (Array[Float], Array[Float], DataFrame) = graft.BuildTimer.time {
-    val codePath = scratch(s, dir, "sq8_codes")
+    val codePath = Artifacts.scratch(s, dir, "sq8_codes")
     val (mins, steps) = ensureSqModel(s, dir)
     val emb = embeddings(s, dir)
-    buildGate(s, codePath) {
+    Artifacts.buildGate(s, codePath) {
       emb.select(col("vec_id"),
           graft.functions.SqOps.encode(col("embedding"), mins, steps).as("code"))
         .write.mode("overwrite").parquet(codePath)
     }
-    (mins, steps, readCommitted(s, codePath))
+    (mins, steps, Artifacts.readCommitted(s, codePath))
   }
 
   /** Warm-path SQ8 top-k: approximate-cosine ranking over the stored
@@ -1431,156 +1312,15 @@ object Ingest {
     Similarity.pqRescore(emb, cand, k)
   }
 
-  /** IVF-SQ8 combined index (FAISS's `IVF…,SQ8` — the practical middle
-    * ground when PQ's 8 B/vector ranks too coarsely but the float
-    * payload is too big to scan): byte-per-dim SQ codes stored
-    * PARTITIONED BY IVF cell, so a probe composes DPP cell pruning with
-    * the 4×-smaller code scan. Model (exact per-dim min/step) and
-    * centroids are the frozen artifacts; encode + assignment are both
-    * narrow kernels, so ingest's only exchange is the partitionBy(cell)
-    * write. Returns (mins, steps, centroids, cell-partitioned codes). */
-  def ensureIvfSqIndex(s: SparkSession, dir: String,
-      nCells: Int = 0): (Array[Float], Array[Float], DataFrame, DataFrame) = graft.BuildTimer.time {
-    val cells =
-      if (nCells > 0) nCells
-      else Similarity.ivfNumCells(embeddingCount(s, dir))
-    val (mins, steps) = ensureSqModel(s, dir)
-    val (centroids, _) = ensureIvfIndex(s, dir, cells)
-    val path = scratch(s, dir, s"ivfsq_codes_c$cells")
-    buildGate(s, path) {
-      // canaries ride the cell-partitioned code table too, so the gate
-      // certifies DPP + byte-code ranking + rescore under real pruning
-      val emb = indexedCorpus(s, dir)
-      Similarity.ivfAssignKernel(emb, centroids)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.SqOps.encode(col("embedding"), mins, steps).as("code"))
-        .repartition(col("cell")) // whole cells per write task (small files)
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (mins, steps, centroids, readCommitted(s, path))
-  }
-
-  /** Batched kNN through the stored IVF-SQ8 index: the same plan-based
-    * probe as the IVF-PQ path — broadcast (q_id, cell) probe frame, DPP
-    * on the cell-partitioned code scan, per-query tables joined
-    * broadcast — but the per-query half of the SQ score is only (alpha:
-    * dim doubles, beta) per query, while the model half (lin/quad/
-    * gamma0) rides the codegen reference array ONCE for the whole batch
-    * (`graft_sq_score_cols`). Shortlist + bounded exact rescore as
-    * everywhere else. */
+  /** Batched kNN through the stored IVF-SQ8 index (FAISS's `IVF…,SQ8` —
+    * the practical middle ground when PQ's 8 B/vector ranks too coarsely
+    * but the float payload is too big to scan): byte-per-dim SQ codes
+    * stored PARTITIONED BY IVF cell, so a probe composes DPP cell pruning
+    * with the 4×-smaller code scan ([[knnJoinSqSides]]). */
   def knnJoinIvfSqStored(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 8, nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(codes), centroids, mins, steps,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe)
-  }
-
-  /** IVF-SQ8 delta append — frozen model, frozen centroids, the landing
-    * batch lands as its own cell-partitioned byte-code table next to
-    * the base (same LSM posture as [[ensureIvfPqDelta]]). */
-  def ensureIvfSqDelta(s: SparkSession, dir: String)
-      : (Array[Float], Array[Float], DataFrame, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val dPath = scratch(s, dir, s"ivfsq_delta_c$cells")
-    graft.functions.SqOps.register(s)
-    buildGate(s, dPath) {
-      Similarity.ivfAssignKernel(appendBatch(embeddings(s, dir)), centroids)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.SqOps.encode(col("embedding"), mins, steps).as("code"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dPath)
-    }
-    (mins, steps, centroids, codes, readCommitted(s, dPath))
-  }
-
-  /** Batched IVF-SQ8 kNN over base ∪ delta (each side DPP-pruned by the
-    * shared probe plan before the union; rescore corpus includes the
-    * appended batch). */
-  def knnJoinIvfSqAppended(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 8, nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, codes, delta) = ensureIvfSqDelta(s, dir)
-    knnJoinSqSides(s, dir, Seq(codes, delta), centroids, mins, steps,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
+      k: Int, expand: Int = 8, nProbe: Int = 0): DataFrame =
+    knnJoinSqSides(s, dir, CellIndex.base(s, dir, Sq), indexedCorpus(s, dir),
       queriesDf, k, expand, nProbe)
-  }
-
-  /** IVF-SQ8 COMPACTION — generation merge, same LSM rule as
-    * [[compactIvfPqIndex]]: model and centroids frozen, so base ∪ delta
-    * byte codes rewrite VERBATIM into gen2 under a new cell-partitioned
-    * path — a pure layout job (dim bytes/row read and written, no
-    * re-encode, no embedding I/O). Old generation files untouched. */
-  def compactIvfSqIndex(s: SparkSession, dir: String)
-      : (Array[Float], Array[Float], DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (mins, steps, centroids, codes, delta) = ensureIvfSqDelta(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val gPath = scratch(s, dir, s"ivfsq_codes_gen2_c$cells")
-    buildGate(s, gPath) {
-      codes.unionByName(delta)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-    }
-    (mins, steps, centroids, readCommitted(s, gPath))
-  }
-
-  /** Batched IVF-SQ8 kNN through the compacted generation (single
-    * DPP-pruned scan; rescore corpus includes the appended batch — the
-    * compacted index SERVES the same corpus the appended one did). */
-  def knnJoinIvfSqCompacted(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 8, nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, gen2) = compactIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(gen2), centroids, mins, steps,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
-      queriesDf, k, expand, nProbe)
-  }
-
-  /** IVF-SQ8 RETRAIN-ON-DRIFT — generation-3 parity for the third code
-    * family (the IVF and IVF-PQ retrain twins exist since r9/r10): when
-    * [[retrainOnDrift]] trips on the served base ∪ delta, gen3 is the
-    * live corpus re-assigned against the NEW centroids and re-encoded
-    * with the FROZEN SQ model. The (min, step) model is cell-independent
-    * exactly like the PQ codebook — cell geometry changes where a code
-    * LIVES, never what it IS — so per-vec_id codes must carry over
-    * verbatim (the gate pins n_code_diverging = 0). Monotone
-    * generations: the centroid marker commits LAST, after the code
-    * payload, and a committed gen3 is served without re-deciding. */
-  def ensureRetrainedIvfSq(s: SparkSession, dir: String,
-      skewThreshold: Double = 4.0)
-      : (Array[Float], Array[Float], DataFrame, DataFrame, Boolean) = graft.BuildTimer.time {
-    val (mins, steps, centroids, codes, delta) = ensureIvfSqDelta(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val cPath = scratch(s, dir, s"ivfsq_centroids_gen3_c$cells")
-    val gPath = scratch(s, dir, s"ivfsq_codes_gen3_c$cells")
-    if (committed(s, cPath))
-      return (mins, steps, readCommitted(s, cPath), readCommitted(s, gPath), true)
-    val live = indexedCorpus(s, dir)
-      .unionByName(appendBatch(embeddings(s, dir)))
-    val (newCents, _, retrained) = retrainOnDrift(live, centroids, skewThreshold)
-    if (!retrained) (mins, steps, centroids, codes.unionByName(delta), false)
-    else {
-      graft.functions.SqOps.register(s)
-      Similarity.ivfAssignKernel(live, newCents)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.SqOps.encode(col("embedding"), mins, steps).as("code"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-      newCents.write.mode("overwrite").parquet(cPath)
-      (mins, steps, readCommitted(s, cPath), readCommitted(s, gPath), true)
-    }
-  }
-
-  /** Batched IVF-SQ8 kNN through the RETRAINED generation (probe plan
-    * against the gen3 centroids, single DPP-pruned gen3 code scan;
-    * rescore corpus is the same live base ∪ delta set gen3 indexes). */
-  def knnJoinIvfSqRetrained(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, skewThreshold: Double = 4.0,
-      expand: Int = 8, nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, gen3, _) =
-      ensureRetrainedIvfSq(s, dir, skewThreshold)
-    knnJoinSqSides(s, dir, Seq(gen3), centroids, mins, steps,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
-      queriesDf, k, expand, nProbe)
-  }
 
   /** Shared generation-spanning batched-kNN serving scaffold for the
     * CODE-table index families (PQ and SQ8 differ only in their
@@ -1590,17 +1330,14 @@ object Ingest {
     * the bounded exact rescore. One copy of the scaffold means a fix to
     * the probe/shortlist/rescore logic cannot drift between families. */
   private def knnJoinCodeSides(s: SparkSession, dir: String,
-      sides: Seq[DataFrame], centroids: DataFrame, tables: DataFrame,
+      gen: CellGen[_], tables: DataFrame,
       scoreCol: org.apache.spark.sql.Column, rescoreCorpus: DataFrame,
       queriesDf: DataFrame, k: Int, expand: Int, nProbe: Int,
-      dead: Option[DataFrame] = None): DataFrame = {
+      dead: Option[DataFrame]): DataFrame = {
     VectorOps.register(s)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val probePlan = batchProbePlan(centroids, queriesDf, probe)
-    val ranked = sides.map { side =>
+    val probePlan = batchProbePlan(gen.centroids, queriesDf,
+      probeWidth(s, dir, k, nProbe))
+    val ranked = gen.frames.map { side =>
       val pruned = side
         .join(broadcast(probeCells(probePlan, side)), "cell") // DPP per side
       // tombstone mask AFTER the cell join (the knnJoinSides invariant:
@@ -1631,10 +1368,10 @@ object Ingest {
   // the honest stored model is too accurate for quantization alone to
   // fail the envelope, so discriminance is proven at the kernel
   private[graft] def knnJoinSqSides(s: SparkSession, dir: String,
-      sides: Seq[DataFrame], centroids: DataFrame, mins: Array[Float],
-      steps: Array[Float], rescoreCorpus: DataFrame, queriesDf0: DataFrame,
-      k: Int, expand: Int, nProbe: Int,
+      gen: CellGen[SqModel], rescoreCorpus: DataFrame, queriesDf0: DataFrame,
+      k: Int, expand: Int = 8, nProbe: Int = 0,
       dead: Option[DataFrame] = None): DataFrame = {
+    val (mins, steps) = gen.model
     graft.functions.SqOps.register(s)
     import s.implicits._
     val queriesDf = Similarity.localizedQueryBatch(queriesDf0)
@@ -1646,207 +1383,42 @@ object Ingest {
         r.getSeq[Float](1).toArray, mins, steps)
       (r.getLong(0), alpha.toSeq, beta)
     }.toSeq.toDF("tq_id", "alpha", "tbeta")
-    knnJoinCodeSides(s, dir, sides, centroids, tables,
+    knnJoinCodeSides(s, dir, gen, tables,
       graft.functions.SqOps.scoreCols(col("code"), col("alpha"),
         col("tbeta"), lin, quad, gamma0),
       rescoreCorpus, queriesDf, k, expand, nProbe, dead)
   }
 
-  /** IVF-PQ combined index: the billion-scale layout (FAISS's IVFPQ,
-    * Jégou et al. 2011) — every vector's 8-byte PQ code stored
-    * PARTITIONED BY its IVF cell, so a probe composes the two prunings:
-    * DPP drops unprobed cell directories at the scan, and within the
-    * probed cells the ranking pass reads ONLY (vec_id, code). At 10⁹
-    * vectors × dim 768 that is ~16 B touched per vector in ~nProbe/nCells
-    * of the corpus, vs 3 KB per vector over everything for brute force.
-    * Returns (codebook, dim, centroids, cell-partitioned codes). */
-  def ensureIvfPqIndex(s: SparkSession, dir: String, m: Int = 8,
-      kCent: Int = 256,
-      nCells: Int = 0): (Array[Float], Int, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val cells =
-      if (nCells > 0) nCells
-      else Similarity.ivfNumCells(embeddingCount(s, dir))
-    val (cb, dim) = ensurePqCodebook(s, dir, m, kCent)
-    val (centroids, _) = ensureIvfIndex(s, dir, cells)
-    val path = scratch(s, dir, s"ivfpq_codes_m${m}_k${kCent}_c$cells")
-    graft.functions.PqOps.register(s)
-    buildGate(s, path) {
-      // canaries ride the cell-partitioned code table too, so the IVF-PQ
-      // gate certifies DPP + ADC + rescore under real pruning
-      val emb = indexedCorpus(s, dir)
-      Similarity.ivfAssignKernel(emb, centroids)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.PqOps.encode(col("embedding"), cb, m, kCent).as("code"))
-        .repartition(col("cell")) // whole cells per write task (small files)
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (cb, dim, centroids, readCommitted(s, path))
-  }
-
-  /** IVF-PQ delta append — the combined index's maintenance path: the
-    * append batch is encoded with the FROZEN stored codebook and
-    * assigned with the FROZEN stored centroids (retraining either would
-    * desynchronize the running index), landing as its own
-    * cell-partitioned code table next to the base. Assignment AND
-    * encoding are both narrow kernels, so delta ingest is a map over
-    * the landing batch plus the partitionBy(cell) write. */
-  def ensureIvfPqDelta(s: SparkSession, dir: String, m: Int = 8,
-      kCent: Int = 256)
-      : (Array[Float], Int, DataFrame, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val dPath = scratch(s, dir, s"ivfpq_delta_m${m}_k${kCent}_c$cells")
-    graft.functions.PqOps.register(s)
-    buildGate(s, dPath) {
-      Similarity.ivfAssignKernel(appendBatch(embeddings(s, dir)), centroids)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.PqOps.encode(col("embedding"), cb, m, kCent).as("code"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dPath)
-    }
-    (cb, dim, centroids, codes, readCommitted(s, dPath))
-  }
-
-  /** Warm-path IVF-PQ top-k over base ∪ delta codes: the [[ivfPqTopKStored]]
-    * composition (DPP cell pruning + 16 B/row ADC + bounded rescore),
-    * with each code scan pruned by its OWN dynamic filter before the
-    * union (same rule as [[ivfTopKAppended]]). */
-  def ivfPqTopKAppended(s: SparkSession, dir: String, k: Int,
-      expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes, delta) = ensureIvfPqDelta(s, dir, m, kCent)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val emb = embeddings(s, dir)
-    val q = appendQueryRow(emb)
+  /** Single-query IVF-PQ serve over ANY generation of the combined
+    * index — the billion-scale layout (FAISS's IVFPQ, Jégou et al.
+    * 2011): every vector's 8-byte PQ code stored PARTITIONED BY its IVF
+    * cell, so a probe composes the two prunings. DPP drops unprobed cell
+    * directories at the scan ([[probed]]), and within the probed cells
+    * the ranking pass reads ONLY (vec_id, code) against the ADC tables of
+    * `q`; the bounded expand·k shortlist is then rescored exactly
+    * against `rescoreCorpus`. At 10⁹ vectors × dim 768 that is ~16 B
+    * touched per vector in ~nProbe/nCells of the corpus, vs 3 KB per
+    * vector over everything for brute force. */
+  private[graft] def ivfPqServe(s: SparkSession, dir: String, gen: CellGen[PqModel],
+      q: DataFrame, rescoreCorpus: DataFrame, k: Int, expand: Int = 60,
+      nProbe: Int = 0, m: Int = 8, kCent: Int = 256): DataFrame = {
+    val (cb, dim) = gen.model
     val (qid, dot, nrm) = Similarity.adcTablesFor(q, cb, dim, m, kCent)
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
-    def cand(c: DataFrame): DataFrame = c
-      .join(broadcast(probeCells(probePlan, c)), "cell")
-      .select(col("vec_id"), col("code"))
-    Similarity.pqRescoreFor(
-      indexedCorpus(s, dir).unionByName(appendBatch(emb)),
-      Similarity.pqRank(cand(codes).unionByName(cand(delta)),
-        qid, dot, nrm, m, kCent, expand * k),
-      k, q)
-  }
-
-  /** IVF-PQ COMPACTION — the combined index's generation merge,
-    * completing the lifecycle symmetry with [[compactIvfIndex]]: base ∪
-    * delta code tables rewrite into gen2 under a new cell-partitioned
-    * path. The codebook AND centroids are frozen, so the codes are
-    * reused VERBATIM — compaction is a pure LAYOUT job (no re-encode,
-    * no re-assign, no embedding I/O: the job reads 16 B/row of codes
-    * and writes them back merged), which is why the nightly compaction
-    * of a 10⁹-vector index is cheap enough to amortize. Old generation
-    * files are never touched; serving switches when gen2 exists. */
-  def compactIvfPqIndex(s: SparkSession, dir: String, m: Int = 8,
-      kCent: Int = 256): (Array[Float], Int, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (cb, dim, centroids, codes, delta) = ensureIvfPqDelta(s, dir, m, kCent)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val gPath = scratch(s, dir, s"ivfpq_codes_gen2_m${m}_k${kCent}_c$cells")
-    buildGate(s, gPath) {
-      codes.unionByName(delta)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-    }
-    (cb, dim, centroids, readCommitted(s, gPath))
-  }
-
-  /** Shared single-query IVF-PQ serving body over ANY (centroids,
-    * cell-partitioned codes) generation: ADC tables for the append
-    * query, DPP-pruned code scan, bounded exact rescore against the
-    * full served corpus. */
-  private def ivfPqServe(s: SparkSession, dir: String, centroids: DataFrame,
-      codes: DataFrame, cb: Array[Float], dim: Int, k: Int, expand: Int,
-      nProbe: Int, m: Int, kCent: Int): DataFrame = {
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val emb = embeddings(s, dir)
-    val q = appendQueryRow(emb)
-    val (qid, dot, nrm) = Similarity.adcTablesFor(q, cb, dim, m, kCent)
-    val probePlan = singleQueryProbePlan(centroids, q, probe)
-    val cand = codes
-      .join(broadcast(probeCells(probePlan, codes)), "cell")
-      .select(col("vec_id"), col("code"))
-    Similarity.pqRescoreFor(
-      indexedCorpus(s, dir).unionByName(appendBatch(emb)),
+    val cand = probed(gen.frames, singleQueryProbePlan(gen.centroids, q,
+      probeWidth(s, dir, k, nProbe)), "vec_id", "code")
+    Similarity.pqRescoreFor(rescoreCorpus,
       Similarity.pqRank(cand, qid, dot, nrm, m, kCent, expand * k), k, q)
-  }
-
-  /** Warm-path IVF-PQ top-k from the COMPACTED generation — the
-    * single-scan serving shape of [[ivfPqTopKStored]] over gen2 (one
-    * DPP-pruned code scan instead of the base ∪ delta union). */
-  def ivfPqTopKCompacted(s: SparkSession, dir: String, k: Int,
-      expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, gen2) = compactIvfPqIndex(s, dir, m, kCent)
-    ivfPqServe(s, dir, centroids, gen2, cb, dim, k, expand, nProbe, m, kCent)
-  }
-
-  /** IVF-PQ RETRAIN — the combined index's half of the drift response,
-    * completing the lifecycle matrix (build → append → compact →
-    * retrain for BOTH layouts): when [[retrainOnDrift]] trips on the
-    * served corpus, generation 3 re-partitions the SAME codes under the
-    * retrained centroids. The PQ codebook is CELL-INDEPENDENT (trained
-    * on sub-vector distributions, not on the coarse geometry), so the
-    * codes stay valid across any re-clustering — they are re-derived
-    * bit-identically inside the assignment scan (deterministic frozen-
-    * codebook encode; cheaper than shuffling the 16 B/row code table
-    * into the new cell layout through a join). Below the threshold the
-    * served generation returns untouched. */
-  def ensureRetrainedIvfPq(s: SparkSession, dir: String,
-      skewThreshold: Double = 4.0, m: Int = 8, kCent: Int = 256)
-      : (Array[Float], Int, DataFrame, DataFrame, Boolean) = graft.BuildTimer.time {
-    val (cb, dim, centroids, codes, delta) = ensureIvfPqDelta(s, dir, m, kCent)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val cPath = scratch(s, dir, s"ivfpq_centroids_gen3_m${m}_k${kCent}_c$cells")
-    val gPath = scratch(s, dir, s"ivfpq_codes_gen3_m${m}_k${kCent}_c$cells")
-    // generations are MONOTONE (the LSM posture): once gen3 exists, a
-    // retrain already happened — serve it without re-deciding, so the
-    // warm path pays two parquet reads, not a k-means pass per probe.
-    // The gate is the CENTROID marker, written last: its _SUCCESS
-    // implies the code payload below committed first.
-    if (committed(s, cPath))
-      return (cb, dim, readCommitted(s, cPath), readCommitted(s, gPath), true)
-    val live = indexedCorpus(s, dir)
-      .unionByName(appendBatch(embeddings(s, dir)))
-    val (newCents, _, retrained) = retrainOnDrift(live, centroids, skewThreshold)
-    if (!retrained) (cb, dim, centroids, codes.unionByName(delta), false)
-    else {
-      graft.functions.PqOps.register(s)
-      Similarity.ivfAssignKernel(live, newCents)
-        .select(col("vec_id"), col("cell"),
-          graft.functions.PqOps.encode(col("embedding"), cb, m, kCent).as("code"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(gPath)
-      newCents.write.mode("overwrite").parquet(cPath)
-      (cb, dim, readCommitted(s, cPath), readCommitted(s, gPath), true)
-    }
-  }
-
-  /** Warm-path IVF-PQ top-k from the RETRAINED generation. */
-  def ivfPqTopKRetrained(s: SparkSession, dir: String, k: Int,
-      skewThreshold: Double = 4.0, expand: Int = 60, nProbe: Int = 0,
-      m: Int = 8, kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes, _) =
-      ensureRetrainedIvfPq(s, dir, skewThreshold, m, kCent)
-    ivfPqServe(s, dir, centroids, codes, cb, dim, k, expand, nProbe, m, kCent)
   }
 
   /** Retrain/compact signal: per-cell occupancy of the served index
     * (base ∪ delta) summarized to a bounded report — cell count, row
     * count, the hottest cell, and the max/mean skew ratio. Rising skew
     * as deltas accumulate against drifting data is the trigger for the
-    * next [[compactIvfIndex]]-then-retrain cycle; the report reads only
+    * next [[CellIndex.compact]]-then-retrain cycle; the report reads only
     * the `cell` partition column (no payload I/O). */
   def ivfOccupancy(s: SparkSession, dir: String): DataFrame = {
-    val (_, assign, delta) = ensureIvfDelta(s, dir)
-    assign.select("cell").unionByName(delta.select("cell"))
+    CellIndex.delta(s, dir, Ivf).frames.map(_.select("cell"))
+      .reduce(_.unionByName(_))
       .groupBy("cell").agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_cells"),
         sum("n").cast(LongType).as("n_vectors"),
@@ -1869,8 +1441,8 @@ object Ingest {
     *
     * Returns (centroids, assignment, retrained?). The caller keeps
     * serving the OLD generation until the returned assignment is
-    * materialized (the [[ensureRetrainedIvf]] wrapper does exactly
-    * that switch for the stored index) — retraining never blocks or
+    * materialized ([[CellIndex.retrain]] does exactly that switch for
+    * the stored indexes) — retraining never blocks or
     * mutates in-flight probes, the same snapshot posture as append and
     * compact. */
   def retrainOnDrift(corpus: DataFrame, servedCentroids: DataFrame,
@@ -1904,34 +1476,6 @@ object Ingest {
     }
   }
 
-  /** Stored-index wrapper for [[retrainOnDrift]] over the served
-    * base ∪ delta: if the skew trips, gen3 (retrained centroids + new
-    * cell-partitioned assignment) is written NEXT TO the old
-    * generations and returned; otherwise the old generation keeps
-    * serving. Old files are never touched either way. */
-  def ensureRetrainedIvf(s: SparkSession, dir: String,
-      skewThreshold: Double = 4.0): (DataFrame, DataFrame, Boolean) = graft.BuildTimer.time {
-    val (centroids, assign, delta) = ensureIvfDelta(s, dir)
-    val cells = Similarity.ivfNumCells(embeddingCount(s, dir))
-    val cPath = scratch(s, dir, s"ivf_centroids_gen3_c$cells")
-    val aPath = scratch(s, dir, s"ivf_assign_gen3_c$cells")
-    // monotone generations: a COMMITTED gen3 centroid marker IS the
-    // retrain decision (payload written first, marker last)
-    if (committed(s, cPath))
-      return (readCommitted(s, cPath), readCommitted(s, aPath), true)
-    val live = assign.select("vec_id", "embedding")
-      .unionByName(delta.select("vec_id", "embedding"))
-    val (newCents, newAssign, retrained) =
-      retrainOnDrift(live, centroids, skewThreshold)
-    if (!retrained) (centroids, assign.unionByName(delta), false)
-    else {
-      newAssign.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(aPath)
-      newCents.write.mode("overwrite").parquet(cPath)
-      (readCommitted(s, cPath), readCommitted(s, aPath), true)
-    }
-  }
-
   /** Warm-path IVF-PQ top-k: probe-cell selection over the tiny
     * centroid table → DPP-pruned scan of the probed cells' CODE
     * directories → ADC ranking (16 B/row) → bounded exact rescore.
@@ -1940,28 +1484,16 @@ object Ingest {
     * ReadSchema, the shared pqRescore). */
   def ivfPqTopKStored(s: SparkSession, dir: String, k: Int,
       expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
+      kCent: Int = 256): DataFrame =
     // the query row comes from the PLAIN corpus (canary ids are offset
     // above every real id, so min(vec_id) is identical — and the plain
     // scan skips the canary-union TakeOrdered subplan in every job that
     // evaluates the broadcast q); the RESCORE side joins back to the
     // indexed corpus, since a code the scan surfaced (canaries
     // included) must be rescorable
-    val emb = embeddings(s, dir)
-    val (qid, dot, nrm) = Similarity.adcTables(emb, cb, dim, m, kCent)
-    val probePlan =
-      singleQueryProbePlan(centroids, Similarity.queryRow(emb), probe)
-    val cand = codes
-      .join(broadcast(probeCells(probePlan, codes)), "cell")
-      .select(col("vec_id"), col("code"))
-    Similarity.pqRescore(indexedCorpus(s, dir),
-      Similarity.pqRank(cand, qid, dot, nrm, m, kCent, expand * k), k)
-  }
+    ivfPqServe(s, dir, CellIndex.base(s, dir, CellIndex.pq(m, kCent)),
+      Similarity.queryRow(embeddings(s, dir)), indexedCorpus(s, dir), k,
+      expand, nProbe, m, kCent)
 
   /** Batched kNN through the STORED IVF index — the production retrieval
     * shape end to end: the (q_id, cell) probe plan is a tiny frame
@@ -1974,10 +1506,8 @@ object Ingest {
     * skew — and no driver-collected cell literal (a wide batch at
     * nCells ≈ 10⁴⁺ would bloat the plan; VERDICT r3 "What's wrong #1"). */
   def knnJoinIvfStored(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(assign), centroids, queriesDf, k, nProbe)
-  }
+      k: Int, nProbe: Int = 0): DataFrame =
+    knnJoinSides(s, dir, CellIndex.base(s, dir, Ivf), queriesDf, k, nProbe)
 
   /** Batched (q_id → probed cells) plan — the |Q|-query generalization
     * of [[singleQueryProbePlan]] (per-query top-nProbe over the tiny
@@ -1993,28 +1523,25 @@ object Ingest {
       .filter(col("rn") <= nProbe)
       .select(col("q_id").as("p_qid"), col("cid").as("cell"))
 
-  /** Batched kNN over ANY set of cell-partitioned index sides (base
-    * alone, base ∪ delta, a compacted generation): ONE probe plan, but
-    * each side joins it SEPARATELY so every scan gets its own
-    * dynamic-partition-pruning filter (the [[ivfTopKAppended]] rule —
-    * a union under the join would block DPP insertion), then the shared
+  /** Batched kNN over ANY generation of the dense family (base alone,
+    * base ∪ delta, a compacted generation): ONE probe plan, but each
+    * frame joins it SEPARATELY so every scan gets its own
+    * dynamic-partition-pruning filter (the [[probed]] rule — a union
+    * under the join would block DPP insertion), then the shared
     * two-phase per-query top-k. This is the serving shape the index
     * lifecycle needs everywhere: the probe machinery must not care
     * which generation layout it reads. */
   private[graft] def knnJoinSides(s: SparkSession, dir: String,
-      sides: Seq[DataFrame], centroids: DataFrame, queriesDf0: DataFrame,
-      k: Int, nProbe: Int, dead: Option[DataFrame] = None): DataFrame = {
+      gen: CellGen[_], queriesDf0: DataFrame, k: Int, nProbe: Int = 0,
+      dead: Option[DataFrame] = None): DataFrame = {
     VectorOps.register(s)
     // bounded batch → literal relation (see Similarity.localizedQueryBatch):
     // the batch subplan otherwise re-evaluates inside the probe-plan,
     // match and rescore broadcasts
     val queriesDf = Similarity.localizedQueryBatch(queriesDf0)
-    val n = embeddingCount(s, dir)
-    val probe =
-      if (nProbe > 0) nProbe
-      else Similarity.ivfNumProbe(n, Similarity.ivfNumCells(n), k)
-    val probePlan = batchProbePlan(centroids, queriesDf, probe)
-    val scored = sides.map { side =>
+    val probePlan = batchProbePlan(gen.centroids, queriesDf,
+      probeWidth(s, dir, k, nProbe))
+    val scored = gen.frames.map { side =>
       val pruned = side
         .join(broadcast(probeCells(probePlan, side)), "cell") // DPP per side
       // tombstone mask AFTER the cell join so it cannot interpose
@@ -2041,89 +1568,49 @@ object Ingest {
     * artifact (the forget_ids rule: serving masks against a STORED
     * table, not a driver literal). */
   def ensureVecForgetSet(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "vec_forget_ids")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "vec_forget_ids")
+    Artifacts.buildGate(s, path) {
       embeddings(s, dir).orderBy("vec_id").limit(NumCanaries / 2)
         .select((col("vec_id") + lit(TwinOffset)).as("vec_id"))
         .write.mode("overwrite").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
-  /** Batched kNN over the stored IVF index with the retraction masked —
-    * deletion on the DENSE axis (BM25 and the sketch index have their
-    * tombstone gates; this closes the third family). The mask is one
-    * broadcast anti-join applied after the DPP cell join; no statistics
-    * need correcting (kNN ranking has no corpus-stat dependency — the
-    * structural simplification deletion enjoys here vs BM25). The
-    * IVF-PQ/SQ variants mask identically through the shared
-    * [[knnJoinSides]] scaffold's `dead` hook. */
-  def knnJoinIvfForgotten(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(assign), centroids, queriesDf, k, nProbe,
-      dead = Some(ensureVecForgetSet(s, dir)))
-  }
-
-  /** Batched IVF-PQ kNN with the retraction masked — the same stored
-    * tombstone set applied through [[knnJoinCodeSides]]'s `dead` hook:
-    * one broadcast anti-join on the 16 B/row code scan, after the DPP
-    * cell join and before the ADC ranking, so a retracted code can
-    * neither surface nor crowd a survivor out of the expand·k
-    * shortlist (and the exact rescore only ever sees the shortlist).
-    * Completes the deletion matrix on the quantized families — a
-    * takedown must hold through EVERY serving representation of the
-    * corpus, not just the full-precision one. */
-  def knnJoinIvfPqForgotten(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, expand: Int = 60, nProbe: Int = 0,
-      m: Int = 8, kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(codes), centroids, cb, dim,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe, m, kCent,
-      dead = Some(ensureVecForgetSet(s, dir)))
-  }
-
-  /** Batched IVF-SQ8 kNN with the retraction masked — same tombstone
-    * set, same post-DPP/pre-ranking mask position, through the byte-code
-    * scan. */
-  def knnJoinIvfSqForgotten(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, expand: Int = 8,
-      nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(codes), centroids, mins, steps,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe,
-      dead = Some(ensureVecForgetSet(s, dir)))
-  }
-
-  /** [[knnJoinIvfForgotten]] with a CALLER-SUPPLIED tombstone frame
-    * (vec_id rows) — the streamed-takedown / composed-takedown entry on
-    * the dense axis. */
+  /** Batched kNN over the stored IVF index with a tombstone frame
+    * (vec_id rows: the stored [[ensureVecForgetSet]], a streamed or a
+    * composed takedown) masked — deletion on the DENSE axis. The mask is
+    * one broadcast anti-join applied after the DPP cell join; no
+    * statistics need correcting (kNN ranking has no corpus-stat
+    * dependency — the structural simplification deletion enjoys here vs
+    * BM25). */
   def knnJoinIvfForgottenWith(s: SparkSession, dir: String, dead: DataFrame,
-      queriesDf: DataFrame, k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(assign), centroids, queriesDf, k, nProbe,
+      queriesDf: DataFrame, k: Int, nProbe: Int = 0): DataFrame =
+    knnJoinSides(s, dir, CellIndex.base(s, dir, Ivf), queriesDf, k, nProbe,
       dead = Some(dead.select("vec_id")))
-  }
 
-  /** [[knnJoinIvfPqForgotten]] with a caller-supplied tombstone frame. */
+  /** Batched IVF-PQ kNN with the retraction masked through
+    * [[knnJoinCodeSides]]'s `dead` hook: one broadcast anti-join on the
+    * 16 B/row code scan, after the DPP cell join and before the ADC
+    * ranking, so a retracted code can neither surface nor crowd a
+    * survivor out of the expand·k shortlist (and the exact rescore only
+    * ever sees the shortlist). A takedown must hold through EVERY
+    * serving representation of the corpus, not just the full-precision
+    * one. */
   def knnJoinIvfPqForgottenWith(s: SparkSession, dir: String,
       dead: DataFrame, queriesDf: DataFrame, k: Int, expand: Int = 60,
-      nProbe: Int = 0, m: Int = 8, kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(codes), centroids, cb, dim,
+      nProbe: Int = 0, m: Int = 8, kCent: Int = 256): DataFrame =
+    knnJoinPqSides(s, dir, CellIndex.base(s, dir, CellIndex.pq(m, kCent)),
       indexedCorpus(s, dir), queriesDf, k, expand, nProbe, m, kCent,
       dead = Some(dead.select("vec_id")))
-  }
 
-  /** [[knnJoinIvfSqForgotten]] with a caller-supplied tombstone frame. */
+  /** Batched IVF-SQ8 kNN with the retraction masked — same
+    * post-DPP/pre-ranking mask position, through the byte-code scan. */
   def knnJoinIvfSqForgottenWith(s: SparkSession, dir: String,
       dead: DataFrame, queriesDf: DataFrame, k: Int, expand: Int = 8,
-      nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(codes), centroids, mins, steps,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe,
-      dead = Some(dead.select("vec_id")))
-  }
+      nProbe: Int = 0): DataFrame =
+    knnJoinSqSides(s, dir, CellIndex.base(s, dir, Sq), indexedCorpus(s, dir),
+      queriesDf, k, expand, nProbe, dead = Some(dead.select("vec_id")))
 
   /** [[phraseMatchForgotten]] with a caller-supplied tombstone frame. */
   def phraseMatchForgottenWith(s: SparkSession, dir: String,
@@ -2211,10 +1698,11 @@ object Ingest {
     // MATERIALIZATION both run on a pool thread (guide §2.6 — r15
     // overlapped only the materialization; the nine constructions were
     // measured at ~3 s of sequential driver-side analyzer work on a
-    // warm scratch, dominating the composed serve). BuildTimer's global
-    // outermost-frame lock (optimization r16) makes the concurrent
-    // ensure* calls safe: builds neither double-accrue the meter nor
-    // race a cold artifact write. Par keeps every row on the executors;
+    // warm scratch, dominating the composed serve). The concurrent
+    // ensure* calls are safe: BuildTimer accrues the UNION of
+    // overlapping build intervals (no double-accrued meter), and the
+    // per-path lock in Artifacts.buildGate keeps two threads from
+    // racing one cold artifact write. Par keeps every row on the executors;
     // the final union is nine checkpointed one-row frames, which also
     // keeps the optimizer off the former 2155-operator concatenated
     // plan.
@@ -2254,94 +1742,8 @@ object Ingest {
       .orderBy("axis")
   }
 
-  /** PURGE of the dense IVF index — the physical half of deletion on
-    * the embedding axis ([[purgeTermIndex]]'s posture): the
-    * cell-partitioned assignment table minus the tombstoned rows,
-    * rewritten under a new generation path. No statistics to correct
-    * (kNN ranking is stat-free) and the layout survives verbatim —
-    * still partitioned by cell, so the purged generation serves through
-    * the identical DPP probe machinery with NO mask left in the plan.
-    * Old generation untouched until the new marker commits (snapshot
-    * isolation); at production scale this folds into the scheduled
-    * compaction that rewrites the assignments anyway. */
-  def purgeIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    val path = scratch(s, dir, "ivf_assign_purged")
-    buildGate(s, path) {
-      assign
-        .join(broadcast(ensureVecForgetSet(s, dir)), Seq("vec_id"), "left_anti")
-        .repartition(col("cell")) // whole cells per write task
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (centroids, readCommitted(s, path))
-  }
-
-  /** Batched kNN from the PURGED dense generation — single pruned scan,
-    * no anti-join in the serve path; shares q_knn_ivf_forget's oracle
-    * VERBATIM, so masked ≡ purged ≡ the pinned canary outcome is held
-    * by one hash (the q_bm25_purge convention, on the dense axis). */
-  def knnJoinIvfPurged(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, gen) = purgeIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(gen), centroids, queriesDf, k, nProbe)
-  }
-
-  /** PURGE of the IVF-PQ code table — same generation rewrite on the
-    * 16 B/row representation: codes minus tombstones under a new
-    * cell-partitioned path (model and centroids untouched — deletion
-    * never retrains). Completes the physical half on every quantized
-    * layout: after this, the retracted vectors' code bytes are
-    * genuinely gone from the serving artifact. */
-  def purgeIvfPqIndex(s: SparkSession, dir: String, m: Int = 8,
-      kCent: Int = 256): (Array[Float], Int, DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    val path = scratch(s, dir, s"ivfpq_codes_purged_m${m}_k$kCent")
-    buildGate(s, path) {
-      codes
-        .join(broadcast(ensureVecForgetSet(s, dir)), Seq("vec_id"), "left_anti")
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (cb, dim, centroids, readCommitted(s, path))
-  }
-
-  /** Batched IVF-PQ kNN from the purged code generation — no mask in
-    * the plan; shares the masked gate's oracle verbatim. */
-  def knnJoinIvfPqPurged(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, expand: Int = 60, nProbe: Int = 0,
-      m: Int = 8, kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, gen) = purgeIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(gen), centroids, cb, dim,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe, m, kCent)
-  }
-
-  /** PURGE of the IVF-SQ8 code table — the byte-code twin of
-    * [[purgeIvfPqIndex]]. */
-  def purgeIvfSqIndex(s: SparkSession, dir: String)
-      : (Array[Float], Array[Float], DataFrame, DataFrame) = graft.BuildTimer.time {
-    val (mins, steps, centroids, codes) = ensureIvfSqIndex(s, dir)
-    val path = scratch(s, dir, "ivfsq_codes_purged")
-    buildGate(s, path) {
-      codes
-        .join(broadcast(ensureVecForgetSet(s, dir)), Seq("vec_id"), "left_anti")
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(path)
-    }
-    (mins, steps, centroids, readCommitted(s, path))
-  }
-
-  /** Batched IVF-SQ8 kNN from the purged code generation — no mask in
-    * the plan; shares the masked gate's oracle verbatim. */
-  def knnJoinIvfSqPurged(s: SparkSession, dir: String,
-      queriesDf: DataFrame, k: Int, expand: Int = 8,
-      nProbe: Int = 0): DataFrame = {
-    val (mins, steps, centroids, gen) = purgeIvfSqIndex(s, dir)
-    knnJoinSqSides(s, dir, Seq(gen), centroids, mins, steps,
-      indexedCorpus(s, dir), queriesDf, k, expand, nProbe)
-  }
-
-  /** Mean measured recall@k of the stored IVF index vs the in-engine
-    * EXACT top-k, as a served frame: `(n_queries, recall_ge_<θ>)`. The
+  /** A measured `(n_queries, mean_recall)` frame gated as the ≥ θ
+    * envelope `(n_queries, recall_ge_090)`. The
     * recall-1.0 canary gates certify the machinery (a planted exact
     * twin MUST surface); this measures the accuracy–cost trade a real
     * deployment runs at — a probe width the operator chose, over
@@ -2351,15 +1753,13 @@ object Ingest {
     * append fixtures (offset 2·NumCanaries) so no cosine-1.0 twin
     * flatters the number; both sides exclude self and rank the same
     * indexed corpus. */
-  def ivfRecallEnvelope(s: SparkSession, dir: String, k: Int,
-      nProbe: Int, nQueries: Int, theta: Double): DataFrame =
-    ivfRecallMeasured(s, dir, k, nProbe, nQueries)
-      .select(col("n_queries"),
-        (col("mean_recall") >= lit(theta)).as("recall_ge_090"))
+  private def recallEnvelope(measured: DataFrame, theta: Double): DataFrame =
+    measured.select(col("n_queries"),
+      (col("mean_recall") >= lit(theta)).as("recall_ge_090"))
 
-  /** The raw measured quantity behind [[ivfRecallEnvelope]]:
-    * `(n_queries, mean_recall)` — exposed for probe-width tuning and
-    * the SimilaritySpec negative control. */
+  /** Mean measured recall@k of the stored IVF index vs the in-engine
+    * EXACT top-k — exposed for probe-width tuning and the SimilaritySpec
+    * negative control. */
   def ivfRecallMeasured(s: SparkSession, dir: String, k: Int,
       nProbe: Int, nQueries: Int): DataFrame =
     recallMeasuredVia(s, dir, k, nQueries,
@@ -2410,14 +1810,6 @@ object Ingest {
     recallMeasuredVia(s, dir, k, nQueries,
       qs => knnJoinIvfPqStored(s, dir, qs, k, expand, nProbe, m, kCent))
 
-  /** [[ivfPqRecallMeasured]] gated as the ≥ θ envelope
-    * (the q_ivf_recall_envelope convention). */
-  def ivfPqRecallEnvelope(s: SparkSession, dir: String, k: Int,
-      nProbe: Int, nQueries: Int, theta: Double): DataFrame =
-    ivfPqRecallMeasured(s, dir, k, nProbe, nQueries)
-      .select(col("n_queries"),
-        (col("mean_recall") >= lit(theta)).as("recall_ge_090"))
-
   /** Measured recall@k of the stored IVF-SQ8 index through its full
     * serving path (probe default, per-byte scalar dequantized ranking,
     * expand·k shortlist, exact rescore) — the SQ sibling of
@@ -2427,13 +1819,6 @@ object Ingest {
       nProbe: Int, nQueries: Int, expand: Int = 8): DataFrame =
     recallMeasuredVia(s, dir, k, nQueries,
       qs => knnJoinIvfSqStored(s, dir, qs, k, expand, nProbe))
-
-  /** [[ivfSqRecallMeasured]] gated as the ≥ θ envelope. */
-  def ivfSqRecallEnvelope(s: SparkSession, dir: String, k: Int,
-      nProbe: Int, nQueries: Int, theta: Double): DataFrame =
-    ivfSqRecallMeasured(s, dir, k, nProbe, nQueries)
-      .select(col("n_queries"),
-        (col("mean_recall") >= lit(theta)).as("recall_ge_090"))
 
   /** PQ geometry of the quantizer-bound envelope: m=4 over the
     * embedding dim leaves subspaces coarse enough that ADC ordering
@@ -2475,14 +1860,6 @@ object Ingest {
       (col("resc") - col("adc") >= lit(0.15)).as("rescore_recovers"))
   }
 
-  /** Batched kNN over the APPENDED index (base ∪ delta) — the |Q|>1
-    * generalization of [[ivfTopKAppended]]'s serving path. */
-  def knnJoinIvfAppended(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, assign, delta) = ensureIvfDelta(s, dir)
-    knnJoinSides(s, dir, Seq(assign, delta), centroids, queriesDf, k, nProbe)
-  }
-
   /** Batched kNN over the base index plus a CALLER-SUPPLIED delta —
     * e.g. one landed by the streaming ingest twin
     * ([[graft.streaming.IvfStream.assignLandingStream]] →
@@ -2493,16 +1870,9 @@ object Ingest {
     * stored layout — exactly what the stream twin emits. */
   def knnJoinIvfWithDelta(s: SparkSession, dir: String, delta: DataFrame,
       queriesDf: DataFrame, k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, assign) = ensureIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(assign, delta), centroids, queriesDf, k, nProbe)
-  }
-
-  /** Batched kNN over the COMPACTED generation — same probe machinery,
-    * one merged scan. */
-  def knnJoinIvfCompacted(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, nProbe: Int = 0): DataFrame = {
-    val (centroids, gen2) = compactIvfIndex(s, dir)
-    knnJoinSides(s, dir, Seq(gen2), centroids, queriesDf, k, nProbe)
+    val base = CellIndex.base(s, dir, Ivf)
+    knnJoinSides(s, dir, base.copy(frames = base.frames :+ delta),
+      queriesDf, k, nProbe)
   }
 
   /** Batched kNN through the STORED IVF-PQ index — the full
@@ -2522,39 +1892,15 @@ object Ingest {
     * query batch itself. */
   def knnJoinIvfPqStored(s: SparkSession, dir: String, queriesDf: DataFrame,
       k: Int, expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes) = ensureIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(codes), centroids, cb, dim,
+      kCent: Int = 256): DataFrame =
+    knnJoinPqSides(s, dir, CellIndex.base(s, dir, CellIndex.pq(m, kCent)),
       indexedCorpus(s, dir), queriesDf, k, expand, nProbe, m, kCent)
-  }
 
-  /** Batched IVF-PQ kNN over the APPENDED index (base ∪ delta code
-    * tables, each DPP-pruned before the union). */
-  def knnJoinIvfPqAppended(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, codes, delta) = ensureIvfPqDelta(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(codes, delta), centroids, cb, dim,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
-      queriesDf, k, expand, nProbe, m, kCent)
-  }
-
-  /** Batched IVF-PQ kNN over the COMPACTED generation (one merged
-    * code scan). */
-  def knnJoinIvfPqCompacted(s: SparkSession, dir: String, queriesDf: DataFrame,
-      k: Int, expand: Int = 60, nProbe: Int = 0, m: Int = 8,
-      kCent: Int = 256): DataFrame = {
-    val (cb, dim, centroids, gen2) = compactIvfPqIndex(s, dir, m, kCent)
-    knnJoinPqSides(s, dir, Seq(gen2), centroids, cb, dim,
-      indexedCorpus(s, dir).unionByName(appendBatch(embeddings(s, dir))),
-      queriesDf, k, expand, nProbe, m, kCent)
-  }
-
-  private def knnJoinPqSides(s: SparkSession, dir: String,
-      sides: Seq[DataFrame], centroids: DataFrame, cb: Array[Float],
-      dim: Int, rescoreCorpus: DataFrame, queriesDf0: DataFrame, k: Int,
-      expand: Int, nProbe: Int, m: Int, kCent: Int,
+  private[graft] def knnJoinPqSides(s: SparkSession, dir: String,
+      gen: CellGen[PqModel], rescoreCorpus: DataFrame, queriesDf0: DataFrame,
+      k: Int, expand: Int = 60, nProbe: Int = 0, m: Int = 8, kCent: Int = 256,
       dead: Option[DataFrame] = None): DataFrame = {
+    val (cb, dim) = gen.model
     graft.functions.PqOps.register(s)
     import s.implicits._
     val queriesDf = Similarity.localizedQueryBatch(queriesDf0)
@@ -2565,7 +1911,7 @@ object Ingest {
         r.getSeq[Float](1).toArray, cb, dim, m, kCent)
       (r.getLong(0), dot.toSeq, nrm.toSeq)
     }.toSeq.toDF("tq_id", "dot", "nrm")
-    knnJoinCodeSides(s, dir, sides, centroids, tables,
+    knnJoinCodeSides(s, dir, gen, tables,
       graft.functions.PqOps.adcCols(col("code"), col("dot"), col("nrm"),
         m, kCent),
       rescoreCorpus, queriesDf, k, expand, nProbe, dead)
@@ -2653,6 +1999,97 @@ object Ingest {
     (ranked, dense)
   }
 
+  /** The 8 canary-source queries of the stored gates: each query's exact
+    * copy is planted in the base index at q_id + [[TwinOffset]]. */
+  private def canaryQueries(s: SparkSession, dir: String): DataFrame =
+    embeddings(s, dir).orderBy("vec_id").limit(NumCanaries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** The 8 append-source queries: each query's exact copy exists ONLY in
+    * the delta, at q_id + [[AppendOffset]]. */
+  private def appendQueries(s: SparkSession, dir: String): DataFrame =
+    embeddings(s, dir).orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** Batched canary recall: the share of the 8 queries whose planted
+    * copy (q_id + `offset`) is in their served top-k. */
+  private def batchRecall(top: DataFrame, offset: Long): DataFrame =
+    top.filter(col("vec_id") === col("q_id") + lit(offset))
+      .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
+        .as("recall_at_10"))
+
+  /** Single-query canary recall: 1.0 iff the planted copy of the probe
+    * `q` (q_id + `offset`) is in the served top-k. */
+  private def singleRecall(top: DataFrame, q: DataFrame, offset: Long): DataFrame =
+    top.join(broadcast(q), col("vec_id") === col("q_id") + lit(offset))
+      .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
+
+  /** Retraction gate on the dense and quantized families: the 8 canary
+    * queries with the first half's twins TOMBSTONED, served masked
+    * (`*_forget`) or from the purged generation (`*_purge`, which
+    * shares its masked twin's oracle verbatim). A retracted twin was its
+    * query's guaranteed top-1, so n_retracted_served == 0 pins the mask
+    * (or the purge) across probe/DPP/shortlist/top-k; the surviving
+    * half must still hit 1.0 (deletion only removes competitors),
+    * pinning that nothing is over-deleted. */
+  private def retractionGate(s: SparkSession, dir: String,
+      serve: DataFrame => DataFrame): DataFrame = {
+    val qs = canaryQueries(s, dir)
+    val dead = ensureVecForgetSet(s, dir).select(col("vec_id").as("dead_id"))
+    serve(qs)
+      .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
+      .agg(
+        (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
+          lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
+          .as("recall_surviving"),
+        count(col("dead_id")).as("n_retracted_served"))
+  }
+
+  /** Compaction differential: the merged gen2 must serve EXACTLY what
+    * base ∪ delta serves (the two top-k sets compared row-for-row,
+    * n_diverging pinned 0 — any re-encode or layout bug diverges), and
+    * `recall` pins the delta-only append canaries through the compacted
+    * scan. The two serves are independent and their outputs BOUNDED (k
+    * rows per query): each is constructed and materialized on a pool
+    * thread (guide §2.6), so the differential reads two tiny checkpoints
+    * instead of re-executing each serve subtree in both exceptAll
+    * directions (optimization r16). */
+  private def compactDifferential(s: SparkSession, appended: => DataFrame,
+      compacted: => DataFrame, recall: DataFrame => DataFrame): DataFrame = {
+    val Seq(a, c) = graft.Par.run(s.sparkContext, Seq(
+      () => appended.localCheckpoint(), () => compacted.localCheckpoint()))
+    val diverging = a.exceptAll(c).unionByName(c.exceptAll(a))
+    recall(c).crossJoin(diverging.agg(count(lit(1)).cast(LongType)
+      .as("n_diverging")))
+  }
+
+  /** Retrain code differential: skewThreshold = 0 forces the drift
+    * response deterministically (occupancy skew is ≥ 1 by construction),
+    * so the COLD run exercises the full retrain — k-means on the live
+    * sample, gen3 assignment under the NEW centroids, codes re-derived
+    * with the FROZEN model — and warm runs serve the monotone gen3 like
+    * production would. Pinned every run: the gen3 code SET is
+    * bit-identical per vec_id to the served base ∪ delta (model frozen ⇒
+    * re-encode deterministic; n_code_diverging 0), and `recall` pins the
+    * append canaries through the retrained geometry (1.0). The canary
+    * serve and the corpus-sized code differential are independent: they
+    * overlap (guide §2.6), checkpointing only the two 1-row aggregates
+    * (the code tables never enter the block manager). */
+  private def retrainDifferential[M](s: SparkSession, dir: String,
+      fam: CellFamily[M], recall: CellGen[M] => DataFrame): DataFrame = {
+    def codes(g: CellGen[M]): DataFrame =
+      g.frames.map(_.select("vec_id", "code")).reduce(_.unionByName(_))
+    val gen3 = CellIndex.retrain(s, dir, fam, skewThreshold = 0.0)
+    val served = codes(CellIndex.delta(s, dir, fam))
+    val g3 = codes(gen3)
+    val diverging = g3.exceptAll(served).unionByName(served.exceptAll(g3))
+    val Seq(r, nDiv) = graft.Par.run(s.sparkContext, Seq(
+      () => recall(gen3).localCheckpoint(),
+      () => diverging.agg(count(lit(1)).cast(LongType)
+        .as("n_code_diverging")).localCheckpoint()))
+    r.crossJoin(nDiv)
+  }
+
   /** This module's share of the driver-visible gate surface —
     * bump WITH any gate added here (RegistrySpec sums the
     * module-local declarations; no global count exists). */
@@ -2672,7 +2109,7 @@ object Ingest {
     "q_ingest_sketches" -> ((s, dir) => {
       import s.implicits._
       val nDocs = ensureSketchedDocs(s, dir).count()
-      val nVecs = ensureIvfIndex(s, dir)._2.count()
+      val nVecs = CellIndex.base(s, dir, Ivf).frames.head.count()
       Seq(("docs_sketched", nDocs), ("ivf_assign", nVecs))
         .toDF("stored_table", "n_rows")
         .orderBy("stored_table")
@@ -2895,15 +2332,9 @@ object Ingest {
     // — nCells ≈ √N, probe to a max(50·k, N/10) candidate scan), so
     // unlike the fixed-16-cell era this gate runs with most of the
     // corpus genuinely UNSCANNED.
-    "q_knn_ivf_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfStored(s, dir, qs, 10)
-        .filter(col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
+    "q_knn_ivf_stored" -> ((s, dir) =>
+      batchRecall(knnJoinIvfStored(s, dir, canaryQueries(s, dir), 10),
+        TwinOffset)),
 
     // MEASURED recall at the serving paths' ACTUAL operating point (the
     // occupancy-sized ivfNumProbe default — 27% of cells at sf0.1,
@@ -2916,7 +2347,7 @@ object Ingest {
     // control: nProbe = 1 on a skewed two-cell corpus fails this
     // envelope, so the gate demonstrably discriminates.
     "q_ivf_recall_envelope" -> ((s, dir) =>
-      ivfRecallEnvelope(s, dir, 10, nProbe = 0, 16, 0.9)),
+      recallEnvelope(ivfRecallMeasured(s, dir, 10, nProbe = 0, 16), 0.9)),
 
     // the same measurement through the LOSSY code families at their
     // real defaults (probe width AND quantizer geometry AND expand·k
@@ -2925,9 +2356,9 @@ object Ingest {
     // carries the discriminating negative controls — m=1 / expand=1
     // drop true neighbors and fail the envelope.
     "q_ivfpq_recall_envelope" -> ((s, dir) =>
-      ivfPqRecallEnvelope(s, dir, 10, nProbe = 0, 16, 0.9)),
+      recallEnvelope(ivfPqRecallMeasured(s, dir, 10, nProbe = 0, 16), 0.9)),
     "q_ivfsq_recall_envelope" -> ((s, dir) =>
-      ivfSqRecallEnvelope(s, dir, 10, nProbe = 0, 16, 0.9)),
+      recallEnvelope(ivfSqRecallMeasured(s, dir, 10, nProbe = 0, 16), 0.9)),
 
     // the QUANTIZER-BOUND regime the 0.956 envelopes never enter: a
     // coarse-m geometry where ADC-only ordering visibly loses the true
@@ -2937,273 +2368,95 @@ object Ingest {
     "q_pq_distortion_envelope" -> ((s, dir) =>
       pqDistortionEnvelope(s, dir)),
 
-    // deletion on the dense axis: 8 canary queries against the stored
-    // IVF index with the first half's twins TOMBSTONED. A retracted
-    // twin was its query's guaranteed top-1, so n_retracted_served == 0
-    // pins the mask across probe/DPP/top-k; the surviving half must
-    // still hit 1.0 (deletion only removes competitors), pinning the
-    // mask doesn't over-delete.
-    "q_knn_ivf_forget" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfForgotten(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
+    // deletion on the dense axis ([[retractionGate]]): the stored IVF
+    // index with the tombstones masked by one broadcast anti-join
+    "q_knn_ivf_forget" -> ((s, dir) => retractionGate(s, dir, qs =>
+      knnJoinIvfForgottenWith(s, dir, ensureVecForgetSet(s, dir), qs, 10))),
 
     // the same retraction held through the QUANTIZED families: a
     // takedown must mask every serving representation, and the code
     // tables carry their own copy of the retracted vectors (8–16 B
-    // codes), so an unmasked ADC/SQ path would keep surfacing them.
-    // Same fixture, same pinned outcome: a retracted twin was its
-    // query's guaranteed top-1, n_retracted_served == 0 pins the mask
-    // across probe/DPP/shortlist/rescore; the surviving half's 1.0 pins
-    // that the mask neither over-deletes nor lets a dead code crowd the
-    // shortlist.
-    "q_knn_ivfpq_forget" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfPqForgotten(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
+    // codes), so an unmasked ADC/SQ path would keep surfacing them
+    "q_knn_ivfpq_forget" -> ((s, dir) => retractionGate(s, dir, qs =>
+      knnJoinIvfPqForgottenWith(s, dir, ensureVecForgetSet(s, dir), qs, 10))),
+    "q_knn_ivfsq_forget" -> ((s, dir) => retractionGate(s, dir, qs =>
+      knnJoinIvfSqForgottenWith(s, dir, ensureVecForgetSet(s, dir), qs, 10))),
 
-    "q_knn_ivfsq_forget" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfSqForgotten(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
-
-    // the physical half on the dense axis: the purged generation serves
-    // the identical canary batch through the identical probe machinery
-    // with no mask anywhere in the plan (PlanSpec pins that), and shares
-    // q_knn_ivf_forget's oracle verbatim — masked ≡ purged pinned by
-    // one hash.
-    "q_ivf_purge" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfPurged(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
-
-    // physical purge on the quantized layouts: after the code-table
-    // generation rewrite, the retracted vectors' code bytes are gone
-    // from the serving artifact — each gate shares its masked twin's
-    // oracle verbatim, completing the 3-axis × 2-half deletion matrix
-    // (BM25, sketches, dense/PQ/SQ — mask and purge everywhere).
-    "q_ivfpq_purge" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfPqPurged(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
-
-    "q_ivfsq_purge" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val dead = ensureVecForgetSet(s, dir)
-        .select(col("vec_id").as("dead_id"))
-      knnJoinIvfSqPurged(s, dir, qs, 10)
-        .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_outer")
-        .agg(
-          (count(when(col("vec_id") === col("q_id") + lit(TwinOffset),
-            lit(1))).cast(DoubleType) / (NumCanaries / 2).toDouble)
-            .as("recall_surviving"),
-          count(col("dead_id")).as("n_retracted_served"))
-    }),
+    // the physical half: the purged generation serves the identical
+    // canary batch through the identical probe machinery with no mask
+    // anywhere in the plan (PlanSpec pins that) — masked ≡ purged pinned
+    // by one hash per family, completing the 3-axis × 2-half deletion
+    // matrix (BM25, sketches, dense/PQ/SQ — mask and purge everywhere)
+    "q_ivf_purge" -> ((s, dir) => retractionGate(s, dir, qs =>
+      knnJoinSides(s, dir, CellIndex.purge(s, dir, Ivf), qs, 10))),
+    "q_ivfpq_purge" -> ((s, dir) => retractionGate(s, dir, qs =>
+      knnJoinPqSides(s, dir, CellIndex.purge(s, dir, Pq),
+        indexedCorpus(s, dir), qs, 10))),
+    "q_ivfsq_purge" -> ((s, dir) => retractionGate(s, dir, qs =>
+      knnJoinSqSides(s, dir, CellIndex.purge(s, dir, Sq),
+        indexedCorpus(s, dir), qs, 10))),
 
     // batched kNN over the APPENDED index: 8 queries = the append-batch
     // SOURCES, whose exact copies live ONLY in the delta — each query's
     // top-10 must contain its +AppendOffset canary, so one 1.0 proves
     // the batched probe plan, per-side DPP on base AND delta, and the
-    // per-query top-k, all through the generation-aware serving path.
-    "q_knn_ivf_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfAppended(s, dir, qs, 10)
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
+    // per-query top-k, all through the generation-aware serving path
+    // (for the code families: frozen model + centroids encode/assign the
+    // landing batch; shortlist + rescore over the appended corpus).
+    "q_knn_ivf_append" -> ((s, dir) =>
+      batchRecall(knnJoinSides(s, dir, CellIndex.delta(s, dir, Ivf),
+        appendQueries(s, dir), 10), AppendOffset)),
+    "q_knn_ivfsq_append" -> ((s, dir) =>
+      batchRecall(knnJoinSqSides(s, dir, CellIndex.delta(s, dir, Sq),
+        grownCorpus(s, dir), appendQueries(s, dir), 10), AppendOffset)),
+    "q_knn_ivfpq_append" -> ((s, dir) =>
+      batchRecall(knnJoinPqSides(s, dir, CellIndex.delta(s, dir, Pq),
+        grownCorpus(s, dir), appendQueries(s, dir), 10), AppendOffset)),
 
-    // batched kNN through the STORED IVF-PQ index: 8 queries share one
-    // DPP-pruned 16 B/row code scan; each query ADC-ranks against its
-    // own broadcast tables and its planted exact-copy canary (riding
-    // the code table at +TwinOffset) must survive the ADC shortlist and
-    // top the exact rescore — recall pinned 1.0 proves the batched
-    // probe plan, the per-query table join, the column-table ADC
-    // kernel, and the two-phase top-k composed under real pruning.
-    // batched kNN through the stored IVF-SQ8 index: 8 canary-source
-    // queries in ONE probe plan — DPP-pruned byte-code scan, per-query
-    // (alpha, beta) tables broadcast, shared model half in the codegen
-    // reference array, shortlist + exact rescore. Each query must
-    // retrieve its planted exact-copy twin at rank 1; pinned 1.0.
-    "q_knn_ivfsq_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfSqStored(s, dir, qs, 10)
-        .filter(col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
+    // batched kNN through the stored code indexes: 8 canary-source
+    // queries in ONE probe plan — DPP-pruned code scan, per-query tables
+    // broadcast (PQ: the column-table ADC kernel; SQ8: (alpha, beta) per
+    // query, the model half in the codegen reference array), shortlist +
+    // exact rescore. Each query must retrieve its planted exact-copy
+    // twin (riding the code table at +TwinOffset); pinned 1.0.
+    "q_knn_ivfsq_stored" -> ((s, dir) =>
+      batchRecall(knnJoinIvfSqStored(s, dir, canaryQueries(s, dir), 10),
+        TwinOffset)),
+    "q_knn_ivfpq_stored" -> ((s, dir) =>
+      batchRecall(knnJoinIvfPqStored(s, dir, canaryQueries(s, dir), 10),
+        TwinOffset)),
 
-    // the IVF-SQ8 delta path: the 8 append-source queries find their
-    // delta-only canaries through base ∪ delta with per-side DPP —
-    // frozen model + centroids encode/assign the landing batch.
-    "q_knn_ivfsq_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfSqAppended(s, dir, qs, 10)
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
-
-    // IVF-SQ8 compaction: the same 8-query batch through the merged
-    // gen2 must equal appended serving ROW-FOR-ROW (codes merge
-    // verbatim — any re-encode or layout bug diverges; n_diverging
-    // pinned 0) and still surface every delta-only canary (1.0).
-    "q_knn_ivfsq_compact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // concurrent bounded dual-serve — the q_knn_ivf_compact treatment
-      val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-        () => knnJoinIvfSqAppended(s, dir, qs, 10).localCheckpoint(),
-        () => knnJoinIvfSqCompacted(s, dir, qs, 10).localCheckpoint()))
-      val diverging = appended.exceptAll(compacted)
-        .unionByName(compacted.exceptAll(appended))
-      compacted
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-        .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_diverging")))
-    }),
-
-    // IVF-SQ8 RETRAIN: skewThreshold = 0 forces the drift response
-    // deterministically (same forced-drift fixture as q_ivfpq_retrain);
-    // cold runs k-means the live sample, re-assign under the new
-    // centroids, re-encode with the FROZEN (min, step) model; warm runs
-    // serve the monotone gen3. Pinned every run: per-vec_id gen3 codes
-    // ≡ served base ∪ delta codes (model frozen ⇒ re-encode
-    // deterministic; n_code_diverging 0), and the 8 delta-only append
-    // canaries surface through the retrained geometry (1.0).
-    "q_ivfsq_retrain" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val (_, _, _, gen3, _) = ensureRetrainedIvfSq(s, dir, skewThreshold = 0.0)
-      val (_, _, _, codes, delta) = ensureIvfSqDelta(s, dir)
-      val served = codes.select("vec_id", "code")
-        .unionByName(delta.select("vec_id", "code"))
-      val g3 = gen3.select("vec_id", "code")
-      val diverging = g3.exceptAll(served).unionByName(served.exceptAll(g3))
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // the canary serve and the corpus-sized code differential are
-      // independent: overlap them (guide §2.6), checkpointing only the
-      // two 1-row aggregates (the code tables themselves stay
-      // unmaterialized — corpus-sized frames never enter the block
-      // manager)
-      val Seq(recall, nDiv) = graft.Par.run(s.sparkContext, Seq(
-        () => knnJoinIvfSqRetrained(s, dir, qs, 10, skewThreshold = 0.0)
-          .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-          .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-            .as("recall_at_10")).localCheckpoint(),
-        () => diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_code_diverging")).localCheckpoint()))
-      recall.crossJoin(nDiv)
-    }),
-
-    "q_knn_ivfpq_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfPqStored(s, dir, qs, 10)
-        .filter(col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
-
-    // batched IVF-PQ kNN over base ∪ delta: the 8 append-source queries
-    // find their delta-only canaries through the composed path — batch
-    // probe plan, per-side DPP on both code scans, per-query ADC
-    // tables, shortlist + rescore over the appended corpus.
-    "q_knn_ivfpq_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      knnJoinIvfPqAppended(s, dir, qs, 10)
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-    }),
-
-    // the same 8-query batch through the COMPACTED generation, plus the
-    // cross-path differential: compacted serving must equal appended
-    // serving row-for-row for every query (n_diverging pinned 0).
+    // batched compaction ([[compactDifferential]]): the 8 append-source
+    // queries through the merged gen2 ≡ appended serving row-for-row
     "q_knn_ivf_compact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val qs = emb.orderBy("vec_id").offset(NumCanaries).limit(NumCanaries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // the two serves are independent and their outputs are BOUNDED
-      // (k rows per query): construct+materialize each on a pool thread
-      // (guide §2.6), so the differential below reads two tiny
-      // checkpoints instead of re-executing each serve subtree in both
-      // exceptAll directions (optimization r16)
-      val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-        () => knnJoinIvfAppended(s, dir, qs, 10).localCheckpoint(),
-        () => knnJoinIvfCompacted(s, dir, qs, 10).localCheckpoint()))
-      val diverging = appended.exceptAll(compacted)
-        .unionByName(compacted.exceptAll(appended))
-      compacted
-        .filter(col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg((count(lit(1)).cast(DoubleType) / NumCanaries.toDouble)
-          .as("recall_at_10"))
-        .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_diverging")))
+      val qs = appendQueries(s, dir)
+      compactDifferential(s,
+        knnJoinSides(s, dir, CellIndex.delta(s, dir, Ivf), qs, 10),
+        knnJoinSides(s, dir, CellIndex.compact(s, dir, Ivf), qs, 10),
+        batchRecall(_, AppendOffset))
+    }),
+    "q_knn_ivfsq_compact" -> ((s, dir) => {
+      val qs = appendQueries(s, dir)
+      compactDifferential(s,
+        knnJoinSqSides(s, dir, CellIndex.delta(s, dir, Sq),
+          grownCorpus(s, dir), qs, 10),
+        knnJoinSqSides(s, dir, CellIndex.compact(s, dir, Sq),
+          grownCorpus(s, dir), qs, 10),
+        batchRecall(_, AppendOffset))
+    }),
+
+    // RETRAIN ([[retrainDifferential]]) on both code families
+    "q_ivfsq_retrain" -> ((s, dir) => {
+      val qs = appendQueries(s, dir)
+      retrainDifferential(s, dir, Sq, (g: CellGen[SqModel]) =>
+        batchRecall(knnJoinSqSides(s, dir, g, grownCorpus(s, dir), qs, 10),
+          AppendOffset))
+    }),
+    "q_ivfpq_retrain" -> ((s, dir) => {
+      val q = appendQueryRow(embeddings(s, dir))
+      retrainDifferential(s, dir, Pq, (g: CellGen[PqModel]) =>
+        singleRecall(ivfPqServe(s, dir, g, q, grownCorpus(s, dir), 10),
+          q, AppendOffset))
     }),
 
     // warm-path IVF-PQ: both prunings composed (DPP cell pruning + ADC
@@ -3211,13 +2464,9 @@ object Ingest {
     // single-query canary: the canary's code is the query's own code
     // (ADC rank ≈ top), it sits in the first-probed cell, and exact
     // rescore scores it 1.0 — losing it anywhere flips the gate.
-    "q_ivfpq_topk_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfPqTopKStored(s, dir, 10)
-        .join(broadcast(Similarity.queryRow(emb)),
-          col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-    }),
+    "q_ivfpq_topk_stored" -> ((s, dir) =>
+      singleRecall(ivfPqTopKStored(s, dir, 10),
+        Similarity.queryRow(embeddings(s, dir)), TwinOffset)),
 
     // warm-path PQ: stored codes + stored codebook, same forced-recall
     // gate; a stale or retrained codebook desynchronizing the codes
@@ -3244,103 +2493,42 @@ object Ingest {
     }),
 
     // INDEX APPEND: a delta batch assigned against the FROZEN stored
-    // centroids and served from base ∪ delta (each side DPP-pruned by
-    // the same probe plan). The appended exact copy of the query vector
-    // exists ONLY in the delta, so the pinned 1.0 proves the
-    // frozen-centroid assignment, the delta's cell layout, and the
-    // unioned pruned-scan path — without rebuilding or touching the
-    // base index files.
+    // centroids (and, for IVF-PQ, encoded with the FROZEN codebook) and
+    // served from base ∪ delta (each side DPP-pruned by the same probe
+    // plan). The appended exact copy of the query vector exists ONLY in
+    // the delta, so the pinned 1.0 proves the frozen-model assignment,
+    // the delta's cell layout, and the unioned pruned-scan path —
+    // without rebuilding or touching the base index files.
     "q_ivf_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfTopKAppended(s, dir, 10)
-        .join(broadcast(appendQueryRow(emb)),
-          col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
+      val q = appendQueryRow(embeddings(s, dir))
+      singleRecall(ivfServe(s, dir, CellIndex.delta(s, dir, Ivf), q, 10),
+        q, AppendOffset)
     }),
-
-    // IVF-PQ APPEND: the combined index's delta path — frozen codebook
-    // AND frozen centroids encode/assign the landing batch, both scans
-    // DPP-pruned before the union, ADC + bounded rescore unchanged. The
-    // appended canary's code exists only in the delta; the pinned 1.0
-    // proves the whole composed warm path over base ∪ delta.
     "q_ivfpq_append" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfPqTopKAppended(s, dir, 10)
-        .join(broadcast(appendQueryRow(emb)),
-          col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
+      val q = appendQueryRow(embeddings(s, dir))
+      singleRecall(ivfPqServe(s, dir, CellIndex.delta(s, dir, Pq),
+        q, grownCorpus(s, dir), 10), q, AppendOffset)
     }),
 
-    // COMPACTION: the merged generation must serve EXACTLY what the
-    // base∪delta path serves — a cross-path differential gate (the two
-    // top-10 sets are compared row-for-row, n_diverging pinned to 0)
-    // plus the append canary's pinned 1.0 through the compacted scan.
+    // COMPACTION ([[compactDifferential]]), single-query: gen2 (frozen
+    // model and centroids, rows merged verbatim) serves EXACTLY what
+    // base ∪ delta serves, and the append canary — now living only
+    // inside gen2 — surfaces through the single DPP-pruned scan.
     "q_ivf_compact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      // concurrent bounded dual-serve — the q_knn_ivf_compact treatment
-      val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-        () => ivfTopKAppended(s, dir, 10).localCheckpoint(),
-        () => ivfTopKCompacted(s, dir, 10).localCheckpoint()))
-      val diverging = appended.exceptAll(compacted)
-        .unionByName(compacted.exceptAll(appended))
-      compacted
-        .join(broadcast(appendQueryRow(emb)),
-          col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-        .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_diverging")))
+      val q = appendQueryRow(embeddings(s, dir))
+      compactDifferential(s,
+        ivfServe(s, dir, CellIndex.delta(s, dir, Ivf), q, 10),
+        ivfServe(s, dir, CellIndex.compact(s, dir, Ivf), q, 10),
+        singleRecall(_, q, AppendOffset))
     }),
-
-    // IVF-PQ COMPACTION: same differential posture as q_ivf_compact for
-    // the combined index — gen2 (codes merged verbatim, frozen codebook
-    // and centroids) must serve EXACTLY what base ∪ delta serves
-    // (n_diverging pinned to 0), and the append canary's code — now
-    // living only inside gen2 — must surface through the single
-    // DPP-pruned compacted scan (pinned 1.0).
     "q_ivfpq_compact" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      // concurrent bounded dual-serve — the q_knn_ivf_compact treatment
-      val Seq(appended, compacted) = graft.Par.run(s.sparkContext, Seq(
-        () => ivfPqTopKAppended(s, dir, 10).localCheckpoint(),
-        () => ivfPqTopKCompacted(s, dir, 10).localCheckpoint()))
-      val diverging = appended.exceptAll(compacted)
-        .unionByName(compacted.exceptAll(appended))
-      compacted
-        .join(broadcast(appendQueryRow(emb)),
-          col("vec_id") === col("q_id") + lit(AppendOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-        .crossJoin(diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_diverging")))
-    }),
-
-    // IVF-PQ RETRAIN: skewThreshold = 0 forces the drift response
-    // deterministically (occupancy skew is ≥ 1 by construction), so the
-    // COLD run exercises the full retrain path — k-means on the live
-    // sample, gen3 assignment under the NEW centroids, codes re-derived
-    // with the FROZEN codebook — and warm runs serve the monotone gen3
-    // like production would. Pinned EVERY run: the gen3 code SET is
-    // bit-identical per vec_id to the served base ∪ delta (codebook
-    // frozen ⇒ re-encode is deterministic; n_code_diverging 0) and the
-    // append canary surfaces through the retrained geometry (1.0).
-    "q_ivfpq_retrain" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      val (_, _, _, gen3, _) = ensureRetrainedIvfPq(s, dir, skewThreshold = 0.0)
-      val (_, _, _, codes, delta) = ensureIvfPqDelta(s, dir)
-      val served = codes.select("vec_id", "code")
-        .unionByName(delta.select("vec_id", "code"))
-      val g3 = gen3.select("vec_id", "code")
-      val diverging = g3.exceptAll(served).unionByName(served.exceptAll(g3))
-      // overlap serve and code differential — the q_ivfsq_retrain
-      // treatment (1-row aggregate checkpoints only)
-      val Seq(recall, nDiv) = graft.Par.run(s.sparkContext, Seq(
-        () => ivfPqTopKRetrained(s, dir, 10, skewThreshold = 0.0)
-          .join(broadcast(appendQueryRow(emb)),
-            col("vec_id") === col("q_id") + lit(AppendOffset))
-          .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-          .localCheckpoint(),
-        () => diverging.agg(count(lit(1)).cast(LongType)
-          .as("n_code_diverging")).localCheckpoint()))
-      recall.crossJoin(nDiv)
+      val q = appendQueryRow(embeddings(s, dir))
+      compactDifferential(s,
+        ivfPqServe(s, dir, CellIndex.delta(s, dir, Pq), q,
+          grownCorpus(s, dir), 10),
+        ivfPqServe(s, dir, CellIndex.compact(s, dir, Pq), q,
+          grownCorpus(s, dir), 10),
+        singleRecall(_, q, AppendOffset))
     }),
 
     // SemDeDup from the STORED index: survivors of the keep-first
@@ -3360,13 +2548,9 @@ object Ingest {
     // runs at the derived geometry with real pruning, and the planted
     // exact copy of the query must surface in the top-10 (oracle pins
     // 1.0; a probe miss or DPP mistake turns the gate red).
-    "q_ivf_topk_stored" -> ((s, dir) => {
-      val emb = embeddings(s, dir)
-      ivfTopKStored(s, dir, 10)
-        .join(broadcast(Similarity.queryRow(emb)),
-          col("vec_id") === col("q_id") + lit(TwinOffset))
-        .agg(count(lit(1)).cast(DoubleType).as("recall_at_10"))
-    }),
+    "q_ivf_topk_stored" -> ((s, dir) =>
+      singleRecall(ivfTopKStored(s, dir, 10),
+        Similarity.queryRow(embeddings(s, dir)), TwinOffset)),
 
     // diversified serving COMPOSED over the stored IVF index (full
     // probe, the forced-parameter convention): shares q_mmr_rerank's

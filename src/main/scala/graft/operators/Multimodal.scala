@@ -156,7 +156,7 @@ object Multimodal {
       dir.replaceAll("[^0-9a-zA-Z]", "_")
     mediaFrame(graft.queries.Tables.documents(s, dir))
       .write.mode("ignore").parquet(path)
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Metadata derivation + inline-vs-reference split over a rendered
@@ -310,8 +310,8 @@ object Multimodal {
     * false so it still reddens any gate it reaches), audio one aHash
     * row per clip. */
   def ensureMediaHashIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_phash_v1")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "media_phash_v1")
+    Artifacts.buildGate(s, path) {
       import s.implicits._
       // every row carries src_id — the ORIGINATING document — because a
       // takedown is keyed by the content's source, not the container's
@@ -364,7 +364,7 @@ object Multimodal {
         .repartition(col("modality"))
         .write.mode("overwrite").partitionBy("modality").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Append-batch id offset on the media axis (the DocAppendOffset
@@ -394,13 +394,13 @@ object Multimodal {
     * pipeline must catch: base ∪ delta serving must cluster each copy
     * with its source WITHOUT re-decoding one byte of the base corpus. */
   def ensureMediaHashDelta(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_phash_delta")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "media_phash_delta")
+    Artifacts.buildGate(s, path) {
       deltaHashKernel(documents(s, dir))
         .repartition(col("modality"))
         .write.mode("overwrite").partitionBy("modality").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** The delta batch's decode+hash INGEST KERNEL over any arriving
@@ -460,26 +460,26 @@ object Multimodal {
     * hashes read and written back; zero decode), the same economics as
     * the IVF-PQ code-table merge. */
   def compactMediaHashIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_phash_compacted")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "media_phash_compacted")
+    Artifacts.buildGate(s, path) {
       ensureMediaHashIndex(s, dir)
         .unionByName(ensureMediaHashDelta(s, dir))
         .repartition(col("modality"))
         .write.mode("overwrite").partitionBy("modality").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** The stored multimodal takedown set (doc-keyed media ids). */
   def ensureMediaForgetSet(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_forget")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "media_forget")
+    Artifacts.buildGate(s, path) {
       documents(s, dir)
         .filter(col("doc_id") % MediaForgetMod === 0)
         .select(col("doc_id").as("media_id"))
         .write.mode("overwrite").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Physical PURGE of the stored hash index: gen2 = gen1 minus every
@@ -490,8 +490,8 @@ object Multimodal {
     * serve is mask-free, pinned by sharing the masked oracle verbatim
     * (the q_bm25_purge convention, 7th axis). */
   def purgeMediaHashIndex(s: SparkSession, dir: String): DataFrame = graft.BuildTimer.time {
-    val path = scratch(s, dir, "media_phash_gen2")
-    buildGate(s, path) {
+    val path = Artifacts.scratch(s, dir, "media_phash_gen2")
+    Artifacts.buildGate(s, path) {
       ensureMediaHashIndex(s, dir)
         .join(broadcast(ensureMediaForgetSet(s, dir)
           .select(col("media_id").as("src_id"))),
@@ -499,7 +499,7 @@ object Multimodal {
         .repartition(col("modality"))
         .write.mode("overwrite").partitionBy("modality").parquet(path)
     }
-    readCommitted(s, path)
+    Artifacts.readCommitted(s, path)
   }
 
   /** Image dedup over the stored index masked by a CALLER-SUPPLIED
@@ -609,18 +609,6 @@ object Multimodal {
   private[graft] def audioRows(index: DataFrame): DataFrame =
     index.filter(col("modality") === "audio")
       .select(col("media_id"), col("phash").as("ahash"), col("ok"))
-
-  private def scratch(s: SparkSession, dir: String, name: String): String =
-    Artifacts.scratch(s, dir, name) // one protocol, one implementation
-
-  private def committed(s: SparkSession, path: String): Boolean =
-    Artifacts.committed(s, path)
-
-  private def buildGate(s: SparkSession, path: String)(write: => Unit): Unit =
-    Artifacts.buildGate(s, path)(write)
-
-  private def readCommitted(s: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame = Artifacts.readCommitted(s, path)
 
   /** This module's share of the driver-visible gate surface —
     * bump WITH any gate added here (RegistrySpec sums the

@@ -73,16 +73,9 @@ object Similarity {
       q.select(col("q_id"), col("q_emb")).head(1).headOption
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))
 
-  /** The (q_emb, q_id) probe as a literal one-row relation — schema
-    * identical to the derived form. */
-  private[graft] def localizedProbe(spark: SparkSession,
-      probe: (Long, Array[Float])): DataFrame =
-    localizedBatchFrame(spark, Array(probe))
-
-  private[graft] def localizedBatch(spark: SparkSession,
-      rows: Array[(Long, Array[Float])]): DataFrame = localizedBatchFrame(spark, rows)
-
-  private def localizedBatchFrame(spark: SparkSession,
+  /** (q_emb, q_id) probe rows as a literal relation — schema identical
+    * to the derived form. */
+  private[graft] def localizedBatchFrame(spark: SparkSession,
       rows: Array[(Long, Array[Float])]): DataFrame = {
     import spark.implicits._
     rows.toSeq.map(p => (p._2.toSeq, p._1)).toDF("q_emb", "q_id")

@@ -456,11 +456,10 @@ class EventStreamSpec extends SparkSpecBase {
     val dead = spark.read.parquet(s"$dir/tomb")
       .select(col("doc_id").as("vec_id"))
     assert(dead.count() == victims.size)
-    val (centroids, assign) =
-      graft.operators.Ingest.ensureIvfIndex(spark, TestSpark.Sf0001)
     val masked = graft.operators.Ingest.knnJoinSides(spark,
-        TestSpark.Sf0001, Seq(assign), centroids, qs, 5, nProbe = 0,
-        dead = Some(dead))
+        TestSpark.Sf0001, graft.operators.CellIndex.base(spark,
+          TestSpark.Sf0001, graft.operators.CellIndex.Ivf), qs, 5,
+        nProbe = 0, dead = Some(dead))
       .select("q_id", "vec_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(victims.forall(v => !masked.exists(_._2 == v)),
@@ -680,7 +679,8 @@ class EventStreamSpec extends SparkSpecBase {
     // must retrieve the canary (an exact copy of the probe's source
     // vector that exists ONLY in the streamed delta) at cosine 1.0.
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_knn").toString
-    val (centroids, _) = graft.operators.Ingest.ensureIvfIndex(spark, TestSpark.Sf0001)
+    val centroids = graft.operators.CellIndex.base(spark, TestSpark.Sf0001,
+      graft.operators.CellIndex.Ivf).centroids
     val (cents, cids, dim) = graft.operators.Similarity.centroidArtifact(centroids)
     val emb = graft.queries.Tables.embeddings(spark, TestSpark.Sf0001)
     // offset 20: past the base-canary sources (the NumCanaries lowest
@@ -961,7 +961,8 @@ class EventStreamSpec extends SparkSpecBase {
     // novel (must come through scored and assigned).
     val dir = java.nio.file.Files.createTempDirectory("graft_ingest_gate").toString
     val stored = graft.operators.Ingest.ensureSketchedDocs(spark, TestSpark.Sf0001)
-    val (centroids, _) = graft.operators.Ingest.ensureIvfIndex(spark, TestSpark.Sf0001)
+    val centroids = graft.operators.CellIndex.base(spark, TestSpark.Sf0001,
+      graft.operators.CellIndex.Ivf).centroids
     val (cents, cids, dim) = graft.operators.Similarity.centroidArtifact(centroids)
     val terms = Seq("table", "scan", "join")
     val (dfMap, nDocs, dlTotal) =

@@ -313,8 +313,9 @@ class PlanSpec extends SparkSpecBase {
     val qs = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     graft.operators.Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001)
-    val p = plan(graft.operators.Ingest.knnJoinIvfForgotten(
-      spark, TestSpark.Sf0001, qs, 5))
+    val p = plan(graft.operators.Ingest.knnJoinIvfForgottenWith(spark,
+      TestSpark.Sf0001, graft.operators.Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001),
+      qs, 5))
     assert(p.contains("dynamicpruning"),
       s"the mask must sit ABOVE the DPP cell join, not between scan and probe:\n$p")
     assert(p.contains("LeftAnti") && p.contains("vec_forget_ids"),
@@ -325,10 +326,10 @@ class PlanSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val qs = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.operators.Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001)
+    val dead = graft.operators.Ingest.ensureVecForgetSet(spark, TestSpark.Sf0001)
     for (df <- Seq(
-        graft.operators.Ingest.knnJoinIvfPqForgotten(spark, TestSpark.Sf0001, qs, 5),
-        graft.operators.Ingest.knnJoinIvfSqForgotten(spark, TestSpark.Sf0001, qs, 5))) {
+        graft.operators.Ingest.knnJoinIvfPqForgottenWith(spark, TestSpark.Sf0001, dead, qs, 5),
+        graft.operators.Ingest.knnJoinIvfSqForgottenWith(spark, TestSpark.Sf0001, dead, qs, 5))) {
       val p = plan(df)
       assert(p.contains("dynamicpruning"),
         s"the mask must sit ABOVE the DPP cell join on the code scan:\n$p")
@@ -341,16 +342,16 @@ class PlanSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val qs = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    graft.operators.Ingest.purgeIvfIndex(spark, TestSpark.Sf0001)
-    graft.operators.Ingest.purgeIvfPqIndex(spark, TestSpark.Sf0001)
-    graft.operators.Ingest.purgeIvfSqIndex(spark, TestSpark.Sf0001)
+    import graft.operators.{CellIndex, Ingest}
+    val dir = TestSpark.Sf0001
+    val rescore = Ingest.indexedCorpus(spark, dir)
     val plans = Seq(
-      "ivf_assign_purged" -> plan(graft.operators.Ingest.knnJoinIvfPurged(
-        spark, TestSpark.Sf0001, qs, 5)),
-      "ivfpq_codes_purged" -> plan(graft.operators.Ingest.knnJoinIvfPqPurged(
-        spark, TestSpark.Sf0001, qs, 5)),
-      "ivfsq_codes_purged" -> plan(graft.operators.Ingest.knnJoinIvfSqPurged(
-        spark, TestSpark.Sf0001, qs, 5)))
+      "ivf_purged_c" -> plan(Ingest.knnJoinSides(
+        spark, dir, CellIndex.purge(spark, dir, CellIndex.Ivf), qs, 5)),
+      "ivfpq_m8_k256_purged_c" -> plan(Ingest.knnJoinPqSides(
+        spark, dir, CellIndex.purge(spark, dir, CellIndex.Pq), rescore, qs, 5)),
+      "ivfsq_purged_c" -> plan(Ingest.knnJoinSqSides(
+        spark, dir, CellIndex.purge(spark, dir, CellIndex.Sq), rescore, qs, 5)))
     for ((gen, p) <- plans) {
       assert(p.contains(gen), s"must read the purged generation $gen:\n$p")
       assert(p.contains("dynamicpruning"),
@@ -407,7 +408,9 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("appended IVF probe prunes base AND delta scans via their own DPP") {
-    val df = graft.operators.Ingest.ivfTopKAppended(spark, TestSpark.Sf0001, 10)
+    val df = graft.operators.Ingest.ivfServe(spark, TestSpark.Sf0001,
+      graft.operators.CellIndex.delta(spark, TestSpark.Sf0001, graft.operators.CellIndex.Ivf),
+      graft.operators.Ingest.appendQueryRow(Tables.embeddings(spark, TestSpark.Sf0001)), 10)
     val p = plan(df)
     // the union must sit ABOVE two independently-pruned scans: one
     // dynamic-pruning partition filter per side (a union under the
@@ -477,8 +480,9 @@ class PlanSpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val qs = emb.orderBy("vec_id").limit(3)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val p = plan(graft.operators.Ingest.knnJoinIvfAppended(
-      spark, TestSpark.Sf0001, qs, 5, nProbe = 4))
+    val p = plan(graft.operators.Ingest.knnJoinSides(spark, TestSpark.Sf0001,
+      graft.operators.CellIndex.delta(spark, TestSpark.Sf0001, graft.operators.CellIndex.Ivf),
+      qs, 5, nProbe = 4))
     assert("dynamicpruning".r.findAllIn(p).size >= 2,
       s"base AND delta scans must each carry a DPP filter:\n$p")
     assert(!p.contains("cell IN ("),
@@ -493,7 +497,8 @@ class PlanSpec extends SparkSpecBase {
     val qs = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     // a tiny in-memory delta in the stored layout (vec_id, cell, embedding)
-    val (centroids, _) = graft.operators.Ingest.ensureIvfIndex(spark, TestSpark.Sf0001)
+    val centroids = graft.operators.CellIndex.base(spark, TestSpark.Sf0001,
+      graft.operators.CellIndex.Ivf).centroids
     val delta = graft.operators.Similarity.ivfAssignKernel(
       emb.orderBy("vec_id").limit(3), centroids)
     val p = plan(graft.operators.Ingest.knnJoinIvfWithDelta(
@@ -795,7 +800,7 @@ class PlanSpec extends SparkSpecBase {
   test("index-backed MMR: the candidate pool scans the stored assignment, not raw embeddings") {
     val p = plan(graft.operators.Ingest.mmrStoredPool(
       spark, TestSpark.Sf0001, graft.operators.Similarity.MmrPoolN))
-    assert(p.contains("ivf_assign"),
+    assert(p.contains("ivf_base_c"),
       s"diversified serving must read the stored cell-partitioned index:\n$p".take(4000))
     assert(p.contains("TakeOrderedAndProject"),
       s"pool selection must be a bounded top-n, not a global sort:\n$p".take(4000))

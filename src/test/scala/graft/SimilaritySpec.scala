@@ -416,7 +416,8 @@ class SimilaritySpec extends SparkSpecBase {
   test("IVF occupancy report accounts for every base+delta row") {
     val s = spark
     val dir = TestSpark.Sf0001
-    val (_, assign, delta) = graft.operators.Ingest.ensureIvfDelta(s, dir)
+    val Seq(assign, delta) = graft.operators.CellIndex.delta(s, dir,
+      graft.operators.CellIndex.Ivf).frames
     val r = graft.operators.Ingest.ivfOccupancy(s, dir).head()
     assert(r.getAs[Long]("n_vectors") == assign.count() + delta.count())
     assert(r.getAs[Long]("n_cells") >= 1)
@@ -430,9 +431,10 @@ class SimilaritySpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     val s = spark
     val dir = TestSpark.Sf0001
-    val (_, baseBefore) = graft.operators.Ingest.ensureIvfIndex(s, dir)
+    import graft.operators.CellIndex
+    val baseBefore = CellIndex.base(s, dir, CellIndex.Ivf).frames.head
     val nBaseBefore = baseBefore.count()
-    val (_, baseAfter, delta) = graft.operators.Ingest.ensureIvfDelta(s, dir)
+    val Seq(baseAfter, delta) = CellIndex.delta(s, dir, CellIndex.Ivf).frames
     // the delta lands NEXT TO the base: exactly the append batch, and
     // the base assignment table is byte-for-byte the same row set
     assert(delta.count() == graft.operators.Ingest.NumCanaries.toLong)
@@ -443,7 +445,8 @@ class SimilaritySpec extends SparkSpecBase {
     // canary at cosine 1.0 (the q_ivf_append gate shape)
     val emb = graft.queries.Tables.embeddings(s, dir)
     val q = graft.operators.Ingest.appendQueryRow(emb)
-    val top = graft.operators.Ingest.ivfTopKAppended(s, dir, 10)
+    val top = graft.operators.Ingest.ivfServe(s, dir,
+      CellIndex.delta(s, dir, CellIndex.Ivf), q, 10)
     val hit = top.join(q,
         col("vec_id") === col("q_id") + lit(graft.operators.Ingest.AppendOffset))
       .collect()
@@ -455,8 +458,11 @@ class SimilaritySpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     val s = spark
     val dir = TestSpark.Sf0001
-    val (_, _, _, codes, delta) = graft.operators.Ingest.ensureIvfPqDelta(s, dir)
-    val (_, _, _, gen2) = graft.operators.Ingest.compactIvfPqIndex(s, dir)
+    import graft.operators.{CellIndex, Ingest}
+    val appendedGen = CellIndex.delta(s, dir, CellIndex.Pq)
+    val compactedGen = CellIndex.compact(s, dir, CellIndex.Pq)
+    val Seq(codes, delta) = appendedGen.frames
+    val Seq(gen2) = compactedGen.frames
     // the merge is a pure layout job: gen2 holds EXACTLY the base∪delta
     // (vec_id, cell, code) rows — codes verbatim, nothing re-encoded
     def canon(df: org.apache.spark.sql.DataFrame) =
@@ -465,14 +471,15 @@ class SimilaritySpec extends SparkSpecBase {
     assert(canon(gen2) == canon(codes.unionByName(delta)))
     // serving differential: the compacted scan returns the appended
     // path's top-10 bit-for-bit, including the delta-only canary at 1.0
-    val appended = graft.operators.Ingest.ivfPqTopKAppended(s, dir, 10)
+    val emb = graft.queries.Tables.embeddings(s, dir)
+    val q = Ingest.appendQueryRow(emb)
+    val grown = Ingest.grownCorpus(s, dir)
+    val appended = Ingest.ivfPqServe(s, dir, appendedGen, q, grown, 10)
       .collect().map(_.toSeq).toSeq
-    val compacted = graft.operators.Ingest.ivfPqTopKCompacted(s, dir, 10)
+    val compacted = Ingest.ivfPqServe(s, dir, compactedGen, q, grown, 10)
       .collect().map(_.toSeq).toSeq
     assert(compacted == appended && compacted.nonEmpty)
-    val emb = graft.queries.Tables.embeddings(s, dir)
-    val q = graft.operators.Ingest.appendQueryRow(emb)
-    val hit = graft.operators.Ingest.ivfPqTopKCompacted(s, dir, 10).join(q,
+    val hit = Ingest.ivfPqServe(s, dir, compactedGen, q, grown, 10).join(q,
         col("vec_id") === col("q_id") + lit(graft.operators.Ingest.AppendOffset))
       .collect()
     assert(hit.length == 1, "append canary missing from compacted top-10")
@@ -488,8 +495,12 @@ class SimilaritySpec extends SparkSpecBase {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
-    val appended = canon(graft.operators.Ingest.knnJoinIvfPqAppended(s, dir, qs, 5))
-    val compacted = canon(graft.operators.Ingest.knnJoinIvfPqCompacted(s, dir, qs, 5))
+    import graft.operators.{CellIndex, Ingest}
+    val grown = Ingest.grownCorpus(s, dir)
+    val appended = canon(Ingest.knnJoinPqSides(s, dir,
+      CellIndex.delta(s, dir, CellIndex.Pq), grown, qs, 5))
+    val compacted = canon(Ingest.knnJoinPqSides(s, dir,
+      CellIndex.compact(s, dir, CellIndex.Pq), grown, qs, 5))
     assert(appended == compacted && appended.nonEmpty)
   }
 
@@ -497,13 +508,19 @@ class SimilaritySpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     val s = spark
     val dir = TestSpark.Sf0001
-    val (_, _, cents3, gen3, retrained) =
-      graft.operators.Ingest.ensureRetrainedIvfPq(s, dir, skewThreshold = 0.0)
-    assert(retrained, "threshold 0 must force the drift response")
+    import graft.operators.{CellIndex, Ingest}
+    val retrainedGen = CellIndex.retrain(s, dir, CellIndex.Pq, skewThreshold = 0.0)
+    val (cents3, gen3) = (retrainedGen.centroids, retrainedGen.frames.head)
+    // threshold 0 must force the drift response: the served generation is
+    // the ONE rewritten gen3 frame, not base ∪ delta
+    assert(retrainedGen.frames.size == 1 &&
+      gen3.inputFiles.nonEmpty && gen3.inputFiles.forall(_.contains("_gen3_c")),
+      "threshold 0 must force the drift response")
     // the retrained generation re-partitions the SAME code set: per
     // vec_id the frozen-codebook encode is deterministic, so codes are
     // bit-identical to the served base∪delta even though cells moved
-    val (_, _, cents2, codes, delta) = graft.operators.Ingest.ensureIvfPqDelta(s, dir)
+    val served = CellIndex.delta(s, dir, CellIndex.Pq)
+    val (cents2, Seq(codes, delta)) = (served.centroids, served.frames)
     def codeSet(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "code").orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -512,9 +529,8 @@ class SimilaritySpec extends SparkSpecBase {
     assert(cents3.count() > 0 &&
       cents3.collect().map(_.toSeq).toSet != cents2.collect().map(_.toSeq).toSet)
     // append canary at 1.0 through the retrained serve path
-    val q = graft.operators.Ingest.appendQueryRow(
-      graft.queries.Tables.embeddings(s, dir))
-    val hit = graft.operators.Ingest.ivfPqTopKRetrained(s, dir, 10, skewThreshold = 0.0)
+    val q = Ingest.appendQueryRow(graft.queries.Tables.embeddings(s, dir))
+    val hit = Ingest.ivfPqServe(s, dir, retrainedGen, q, Ingest.grownCorpus(s, dir), 10)
       .join(q, col("vec_id") === col("q_id") + lit(graft.operators.Ingest.AppendOffset))
       .collect()
     assert(hit.length == 1 && math.abs(hit.head.getAs[Double]("score") - 1.0) < 1e-6)
@@ -795,7 +811,8 @@ class SimilaritySpec extends SparkSpecBase {
     val exact = Similarity.knnJoin(emb, qs, 6).select("q_id", "vec_id")
     def recallAt(nProbe: Int): Double = {
       val approx = graft.operators.Ingest.knnJoinSides(spark,
-          TestSpark.Sf0001, Seq(assign), centroids, qs, 6, nProbe)
+          TestSpark.Sf0001, graft.operators.CellGen(centroids, (), Seq(assign)),
+          qs, 6, nProbe)
         .select("q_id", "vec_id")
       approx.join(exact, Seq("q_id", "vec_id"), "left_semi")
         .count().toDouble / 6.0
@@ -902,7 +919,7 @@ class SimilaritySpec extends SparkSpecBase {
     def recallWith(mins: Array[Float], steps: Array[Float],
         codedSides: Seq[org.apache.spark.sql.DataFrame]): Double = {
       val approx = graft.operators.Ingest.knnJoinSqSides(spark,
-          TestSpark.Sf0001, codedSides, centroids, mins, steps,
+          TestSpark.Sf0001, graft.operators.CellGen(centroids, (mins, steps), codedSides),
           emb, qs, 6, expand = 1, nProbe = 2)
         .select("q_id", "vec_id")
       approx.join(exact, Seq("q_id", "vec_id"), "left_semi")
